@@ -19,6 +19,11 @@ deterministic and only need identical rounding.
 
 from __future__ import annotations
 
+import math
+import os
+import threading
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -94,25 +99,44 @@ def register(spark: SparkSession, sf_dir: str, tables=ALL_TABLES) -> None:
     same truncation DuckDB applies casting TIMESTAMP_NS → TIMESTAMP;
     generator versions that write native µs timestamps pass through
     untouched. Both engines see identical values either way.
+
+    Each table's frame (read + ``ts`` normalisation + widen exchange)
+    is built once per session and kept in a session-scoped registry:
+    ``spark.read.parquet`` runs a schema-inference job per call, and a
+    long-lived session re-registers the same files on every query
+    build. An entry is keyed on the session, the table and its
+    resolved path, and is reused only while all of these still match
+    what it was built from: the file's Hadoop status (length and
+    modification time — of every file below it for a directory), the
+    session's default parallelism, and the widen inputs
+    (``SPARK_GRAFT_NO_WIDEN``, ``SPARK_GRAFT_WIDEN_SPLIT_BYTES``). Any
+    mismatch rebuilds and replaces the entry, so a rewritten file is
+    read again; a stopped (collected) session's entries go with it.
     """
     parallelism = spark.sparkContext.defaultParallelism
+    split = _widen_split_bytes()
+    with _REGISTRY_LOCK:
+        frames = _REGISTRY.setdefault(spark, {})
     for t in tables:
         if t == "events":
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            df = spark.read.parquet(f"{sf_dir}/events.parquet")
-            if isinstance(df.schema["ts"].dataType, T.LongType):
-                # legacy nanos-as-long data: floor to µs, then cast to
-                # NTZ so ts has the same type as current-generator data
-                df = df.withColumn(
-                    "ts",
-                    F.expr("CAST(timestamp_micros(ts div 1000) AS TIMESTAMP_NTZ)"),
-                )
-        else:
-            df = spark.read.parquet(f"{sf_dir}/{t}.parquet")
-        if t in _WIDE_TABLES:
-            n_target = _widen_target(
-                spark, f"{sf_dir}/{t}.parquet", df, parallelism, t
+        path, stamp = _file_stamp(spark, f"{sf_dir}/{t}.parquet")
+        inputs = (stamp, parallelism, split)
+        with _REGISTRY_LOCK:
+            entry = frames.get((t, path))
+        if entry is not None and entry[0] == inputs:
+            entry[1].createOrReplaceTempView(t)
+            continue
+        df = spark.read.parquet(path)
+        if t == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
+            # legacy nanos-as-long data: floor to µs, then cast to NTZ
+            # so ts has the same type as current-generator data
+            df = df.withColumn(
+                "ts",
+                F.expr("CAST(timestamp_micros(ts div 1000) AS TIMESTAMP_NTZ)"),
             )
+        if t in _WIDE_TABLES and split is not None:
+            n_target = _widen_target(df, parallelism, t, split)
             if n_target is not None:
                 # r12 (guide §2.5 input skew): a single-row-group
                 # parquet file scans as ONE task, pinning the whole map
@@ -156,7 +180,34 @@ def register(spark: SparkSession, sf_dir: str, tables=ALL_TABLES) -> None:
                 # parallelism whenever the physical layout under-splits
                 # a big table, nothing otherwise.
                 df = df.repartition(n_target, F.col(_WIDE_TABLES[t][0]))
+        with _REGISTRY_LOCK:
+            frames[(t, path)] = (inputs, df)
         df.createOrReplaceTempView(t)
+
+
+#: session -> {(table, resolved path): (build inputs, frame)}; weak on
+#: the session, so a stopped session's frames are dropped with it and
+#: never handed to a later session
+_REGISTRY: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_REGISTRY_LOCK = threading.Lock()
+
+
+def _file_stamp(spark: SparkSession, path: str) -> tuple[str, tuple]:
+    """``(qualified path, (length, modification time))`` from the
+    Hadoop file status; for a directory, the sorted stamps of every
+    file below it (a file rewritten in place leaves the directory's
+    own status unchanged)."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    status = fs.getFileStatus(hpath)
+    if not status.isDirectory():
+        return status.getPath().toString(), (status.getLen(), status.getModificationTime())
+    files = fs.listFiles(hpath, True)
+    stamps = []
+    while files.hasNext():
+        f = files.next()
+        stamps.append((f.getPath().toString(), f.getLen(), f.getModificationTime()))
+    return status.getPath().toString(), tuple(sorted(stamps))
 
 
 #: fact-scale tables whose scans carry the map-side work worth
@@ -184,42 +235,28 @@ _WIDE_TABLES = {
 #: overhead differs materially from this box.
 _WIDEN_SPLIT_BYTES = 512 * 1024
 
-#: (path, parallelism) -> target split count or None; the split count
-#: of an immutable test file cannot change within a session, and
-#: re-planning the scan per register() call would cost ~30 ms ×
-#: hundreds of query builds
-_SCAN_WIDTH_CACHE: dict[tuple[str, int], int | None] = {}
+
+def _widen_split_bytes() -> int | None:
+    """The widen split size, or ``None`` when widening is off."""
+    if os.environ.get("SPARK_GRAFT_NO_WIDEN"):  # measurement kill-switch
+        return None
+    try:
+        return int(os.environ.get("SPARK_GRAFT_WIDEN_SPLIT_BYTES", _WIDEN_SPLIT_BYTES))
+    except ValueError:  # pragma: no cover
+        return _WIDEN_SPLIT_BYTES
 
 
-def _widen_target(
-    spark, path: str, df: DataFrame, parallelism: int, table: str
-) -> int | None:
+def _widen_target(df: DataFrame, parallelism: int, table: str, split: int) -> int | None:
     """Size-derived widen target: ``ceil(weighted_bytes / split)``
     capped at the session parallelism, or ``None`` when the scan is
     already at least half that parallel (every real multi-split lake
     table)."""
-    import math as _math
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_NO_WIDEN"):  # measurement kill-switch
-        return None
-    key = (path, parallelism)
-    if key in _SCAN_WIDTH_CACHE:
-        return _SCAN_WIDTH_CACHE[key]
-    try:
-        split = int(
-            _os.environ.get("SPARK_GRAFT_WIDEN_SPLIT_BYTES", _WIDEN_SPLIT_BYTES)
-        )
-    except ValueError:  # pragma: no cover
-        split = _WIDEN_SPLIT_BYTES
     weight = _WIDE_TABLES[table][1]
     # Catalyst's own estimate: on-disk bytes for a bare parquet scan —
     # the same statistic broadcast planning runs on
     est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    n = min(parallelism, max(1, _math.ceil(est * weight / split)))
-    target = n if df.rdd.getNumPartitions() * 2 < n else None
-    _SCAN_WIDTH_CACHE[key] = target
-    return target
+    n = min(parallelism, max(1, math.ceil(est * weight / split)))
+    return n if df.rdd.getNumPartitions() * 2 < n else None
 
 
 # ---------------------------------------------------------------------------

@@ -105,6 +105,11 @@ def read_with_quarantine(
     for k, v in opts.items():
         reader = reader.option(k, v)
     scan = reader.csv(path) if file_format == "csv" else reader.json(path)
+    # a cached scan of the same path from an earlier call would match
+    # this plan and serve that call's rows; refreshing the path drops
+    # that data (and the file listing under it), so a landing file
+    # rewritten in place is parsed again — once, by the cache below
+    spark.catalog.refreshByPath(path)
     # input_file_name() must bind below the cache: above an
     # InMemoryRelation it evaluates to ''
     df = scan.withColumn("_source_file", F.input_file_name()).cache()

@@ -6,7 +6,10 @@ For each named query: capture ``.explain("formatted")`` to
 job/stage/task counts from the status tracker — the per-query
 "how many jobs and exchanges did this really run" number that the
 static plan alone cannot show (eager staging actions are invisible
-there).
+there). Each run also reports the Spark jobs spent building the
+query, before its result is written (schema inference, eager
+staging), and the number of classes codegen compiled for it — on a
+warm run the compiled-code cache should leave that at 0.
 
 Usage:
     python scripts/profile_query.py [--tag before] [--runs 2] \
@@ -36,6 +39,8 @@ def profile(names, tag="before", runs=2, plans_only=False, sf_dir=None, round_di
     os.makedirs(plans_dir, exist_ok=True)
     spark = get_spark("pipelines_spark_profile")
     sc = spark.sparkContext
+    # one count per class whole-stage / expression codegen compiles
+    compiled = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     QUERIES["a6_distinct_segments"](spark, sf_dir).count()  # JVM warm-up
     out = {}
     for name in names:
@@ -51,18 +56,25 @@ def profile(names, tag="before", runs=2, plans_only=False, sf_dir=None, round_di
             print(f"{name}: exchanges={n_exchanges}", flush=True)
             continue
         times = []
+        build_jobs = []
+        compilations = []
         jobs = stages = tasks = 0
+        tracker = sc.statusTracker()
         for r in range(runs):
             group = f"{name}-run{r}"
-            sc.setJobGroup(group, name)
+            c0 = compiled.getCount()
+            sc.setJobGroup(f"{group}-build", name)
             t0 = time.perf_counter()
             # rebuild the frame per run: eager staging inside the query
             # function is part of its real cost (bench.py does the same)
             q = QUERIES[name](spark, sf_dir)
+            build_ids = list(tracker.getJobIdsForGroup(f"{group}-build"))
+            build_jobs.append(len(build_ids))
+            sc.setJobGroup(group, name)
             q.write.format("noop").mode("overwrite").save()
             times.append(round(time.perf_counter() - t0, 3))
-            tracker = sc.statusTracker()
-            job_ids = tracker.getJobIdsForGroup(group)
+            compilations.append(compiled.getCount() - c0)
+            job_ids = build_ids + list(tracker.getJobIdsForGroup(group))
             if r == runs - 1:
                 jobs = len(job_ids)
                 for jid in job_ids:
@@ -88,10 +100,13 @@ def profile(names, tag="before", runs=2, plans_only=False, sf_dir=None, round_di
             "jobs_last_run": jobs,
             "stages_last_run": stages,
             "tasks_last_run": tasks,
+            "build_jobs": build_jobs,
+            "codegen_compilations": compilations,
             "exchanges_static": n_exchanges,
         }
         print(f"{name}: best={min(times)} times={times} jobs={jobs} "
-              f"stages={stages} tasks={tasks} exch={n_exchanges}", flush=True)
+              f"stages={stages} tasks={tasks} exch={n_exchanges} "
+              f"build_jobs={build_jobs} compilations={compilations}", flush=True)
     spark.stop()
     return out
 

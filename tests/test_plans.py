@@ -234,7 +234,6 @@ def test_register_widens_fact_scans(spark, sf_medium, monkeypatch):
     the exchange (the scan still carries PushedFilters)."""
     from pyspark.sql import functions as F
 
-    from pipelines_spark import queries as Q
     from pipelines_spark.queries import register
 
     monkeypatch.delenv("SPARK_GRAFT_NO_WIDEN", raising=False)
@@ -242,39 +241,32 @@ def test_register_widens_fact_scans(spark, sf_medium, monkeypatch):
     # target: ceil(1042463 / 131072) = 8 tasks — well under the
     # session's 32-way parallelism
     monkeypatch.setenv("SPARK_GRAFT_WIDEN_SPLIT_BYTES", str(128 * 1024))
-    Q._SCAN_WIDTH_CACHE.clear()
-    try:
-        register(spark, sf_medium, ("lineitem", "nation", "events"))
-        plan = (
-            spark.table("lineitem")._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "hashpartitioning(l_orderkey" in plan, plan
-        # right-sized: 8 tasks from the size estimate, NOT the session
-        # parallelism (32)
-        assert ", 8)" in plan and ", 32)" not in plan, plan
-        # a scan whose size-derived target is within 2x of its split
-        # count gains nothing (events at sf0.01: ceil(221 KB/128 KB)=2
-        # vs 1 existing split — not worth an exchange)
-        eplan = (
-            spark.table("events")._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "hashpartitioning" not in eplan, eplan
-        # dims are not widened (they broadcast; an exchange would be waste)
-        nplan = spark.table("nation")._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in nplan, nplan
-        # pushdown reaches the scan THROUGH the widen exchange
-        q = spark.table("lineitem").filter(F.col("l_quantity") < 2.0).select("l_orderkey")
-        fplan = q._jdf.queryExecution().executedPlan().toString()
-        assert "PushedFilters: [IsNotNull(l_quantity), LessThan(l_quantity,2.0)]" in fplan, fplan
-        # kill-switch: bare scan again
-        monkeypatch.setenv("SPARK_GRAFT_NO_WIDEN", "1")
-        Q._SCAN_WIDTH_CACHE.clear()
-        register(spark, sf_medium, ("lineitem",))
-        plan_off = (
-            spark.table("lineitem")._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "hashpartitioning" not in plan_off, plan_off
-    finally:
-        # the cache is keyed by (path, parallelism) only — drop the
-        # entries computed under this test's split-size override
-        Q._SCAN_WIDTH_CACHE.clear()
+    register(spark, sf_medium, ("lineitem", "nation", "events"))
+    plan = (
+        spark.table("lineitem")._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "hashpartitioning(l_orderkey" in plan, plan
+    # right-sized: 8 tasks from the size estimate, NOT the session
+    # parallelism (32)
+    assert ", 8)" in plan and ", 32)" not in plan, plan
+    # a scan whose size-derived target is within 2x of its split
+    # count gains nothing (events at sf0.01: ceil(221 KB/128 KB)=2
+    # vs 1 existing split — not worth an exchange)
+    eplan = (
+        spark.table("events")._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "hashpartitioning" not in eplan, eplan
+    # dims are not widened (they broadcast; an exchange would be waste)
+    nplan = spark.table("nation")._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in nplan, nplan
+    # pushdown reaches the scan THROUGH the widen exchange
+    q = spark.table("lineitem").filter(F.col("l_quantity") < 2.0).select("l_orderkey")
+    fplan = q._jdf.queryExecution().executedPlan().toString()
+    assert "PushedFilters: [IsNotNull(l_quantity), LessThan(l_quantity,2.0)]" in fplan, fplan
+    # kill-switch: bare scan again
+    monkeypatch.setenv("SPARK_GRAFT_NO_WIDEN", "1")
+    register(spark, sf_medium, ("lineitem",))
+    plan_off = (
+        spark.table("lineitem")._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "hashpartitioning" not in plan_off, plan_off

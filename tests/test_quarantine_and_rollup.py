@@ -61,6 +61,20 @@ def test_all_good_yields_empty_quarantine(spark, tmp_path):
     assert good.count() == 2 and bad.count() == 0
 
 
+def test_landing_file_rewritten_in_place_is_read_again(spark, tmp_path):
+    """A later call on the same path must not be served the earlier
+    call's cached scan: a capture that rewrites its landing file in
+    place gets the new rows, as a plain spark.read.csv does."""
+    src = tmp_path / "orders.csv"
+    src.write_text("1\n2\n")
+    good, _bad = read_with_quarantine(spark, str(src), "k int")
+    assert sorted(r["k"] for r in good.collect()) == [1, 2]
+    src.write_text("10\n20\n30\n40\n")
+    good, bad = read_with_quarantine(spark, str(src), "k int")
+    assert sorted(r["k"] for r in good.collect()) == [10, 20, 30, 40]
+    assert bad.count() == 0
+
+
 # ------------------------------------------------------------------- rollup
 
 def _events(spark, rows):
