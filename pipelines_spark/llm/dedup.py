@@ -521,14 +521,9 @@ def persist_fingerprints(fps: DataFrame, path: str, batch_id: str) -> None:
     re-running an ingestion batch (the reference's idempotent-load
     discipline, sinks/partitioned.py provenance) overwrites its own
     fingerprints instead of duplicating them."""
-    from pipelines_spark.sinks.partitioned import write_partitioned
+    from pipelines_spark.sinks.partitioned import write_batch
 
-    write_partitioned(
-        fps.withColumn("_batch_id", F.lit(batch_id)),
-        path,
-        ["_batch_id"],
-        mode="overwrite_partitions",
-    )
+    write_batch(fps, path, batch_id)
 
 
 def incremental_dedup_batch(

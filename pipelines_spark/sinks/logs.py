@@ -7,12 +7,24 @@ One row per (table, scheduled timestamp) attempt:
 :976-985). The log table is what the recapture spine (operators.spine)
 anti-joins against, so appends must be atomic per batch.
 
-The SAME table also receives rows from the streaming writers
-(streaming/capture.py per-batch successes, streaming/drift_stream.py
-per-window verdicts), which stamp a micro-batch ``batch_id``; batch
-appends carry it as NULL so every producer writes ONE schema and a
-plain (non-mergeSchema) read sees every column regardless of which
-file's footer Spark samples.
+Every row goes through ``write_log_rows``, which owns the schema and
+the ``data`` partition. Its producers:
+
+- ``append_capture_log``: capture windows, recaptures and maintenance
+  runs (flows.py), ``batch_id`` NULL;
+- streaming/capture.py: one success row per micro-batch, stamped with
+  its ``batch_id``;
+- streaming/drift_stream.py: one verdict row per closed monitor
+  window, stamped with the micro-batch that closed it.
+
+One schema for every producer means a plain (non-mergeSchema) read
+sees every column regardless of which file's footer Spark samples.
+
+Rows are appended, never replaced: a micro-batch replayed after a
+crash before its checkpoint commit logs its row again, with the same
+``batch_id``. Count distinct ``batch_id`` values, not rows, to count
+stream batches; the recapture spine only asks whether a timestamp has
+a success row, which a repeat does not change.
 
 Layout migration note: the table has been ``partitionBy("data")``
 since round 10. A log directory written by a PRE-round-10 deployment
@@ -26,7 +38,7 @@ from __future__ import annotations
 
 from datetime import datetime
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -40,6 +52,25 @@ LOG_SCHEMA = T.StructType(
         T.StructField("batch_id", T.LongType(), True),
     ]
 )
+
+
+def write_log_rows(rows: DataFrame, path: str) -> None:
+    """Append ``rows`` (the ``LOG_SCHEMA`` columns, by name) to the log
+    table at ``path``, partitioned by the ``data`` of their
+    ``timestamp_captura``, in one file per append.
+
+    ``repartition(1)``, not ``coalesce(1)``: coalescing would also run
+    the row conversion of a ``createDataFrame`` list (one Python worker
+    pass per input slice) serially in the single write task, which
+    measured about twice as slow for a one-row append."""
+    (
+        rows.select(*(F.col(f.name).cast(f.dataType) for f in LOG_SCHEMA))
+        .withColumn("data", F.date_format("timestamp_captura", "yyyy-MM-dd"))
+        .repartition(1)
+        .write.mode("append")
+        .partitionBy("data")
+        .parquet(path)
+    )
 
 
 def append_capture_log(
@@ -56,8 +87,4 @@ def append_capture_log(
     if recapture:
         err = f"[recapturado]{error or ''}"
     rows = [(ts, success, err, None) for ts in timestamps]
-    df = (
-        spark.createDataFrame(rows, LOG_SCHEMA)
-        .withColumn("data", F.date_format("timestamp_captura", "yyyy-MM-dd"))
-    )
-    df.repartition(1).write.mode("append").partitionBy("data").parquet(path)
+    write_log_rows(spark.createDataFrame(rows, LOG_SCHEMA), path)

@@ -12,6 +12,9 @@ Reference semantics being reproduced (SURVEY K3/K6/K7/T6):
   incoming batch. Re-running a window is idempotent — the engine's
   exactly-once-ish contract.
 - dump modes append/overwrite (pipelines/utils/dump_db/tasks.py:436-587).
+- every ``foreachBatch`` sink writes through ``write_batch``: a
+  ``_batch_id`` partition under dynamic overwrite, so a replayed
+  micro-batch replaces its own files.
 
 Scale notes: the writer repartitions by the partition columns before
 writing so each task writes few files per partition (avoids the
@@ -21,6 +24,7 @@ touches only affected partitions, never the whole table.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -76,6 +80,36 @@ def write_partitioned(
     writer.save(path)
 
 
+#: partition column of every micro-batch sink (``write_batch``)
+BATCH_ID_COL = "_batch_id"
+
+
+def write_batch(
+    df: DataFrame,
+    path: str,
+    batch_id: int | str,
+    partition_cols: list[str] | None = None,
+) -> None:
+    """Write one micro-batch under ``partition_cols`` + ``_batch_id``
+    with dynamic partition overwrite.
+
+    ``foreachBatch`` is at-least-once: a batch re-run after a crash
+    before the checkpoint commit gets the same id, so its rows replace
+    that batch's own files and the table ends as one run would leave
+    it — provided ``partition_cols`` are replay-stable (row values, or
+    a stream's ``current_timestamp()``, which is the batch timestamp
+    kept in the offset log), never the wall clock. Other batches'
+    files are untouched. Spark's file listing skips ``_``-prefixed
+    names only when they hold no ``=``, so ``_batch_id=…`` is read.
+    """
+    write_partitioned(
+        df.withColumn(BATCH_ID_COL, F.lit(str(batch_id))),
+        path,
+        [*(partition_cols or []), BATCH_ID_COL],
+        mode="overwrite_partitions",
+    )
+
+
 def _hadoop_fs(spark: SparkSession, path: str):
     """(FileSystem, Path) for ``path`` via the Hadoop FileSystem API —
     the same abstraction Spark's writers use, so deletes/listing work
@@ -87,6 +121,22 @@ def _hadoop_fs(spark: SparkSession, path: str):
     # qualify so path strings compare stably against listStatus output
     # (which always returns fully-qualified scheme://… paths)
     return fs, fs.makeQualified(hpath)
+
+
+def is_missing_path(spark: SparkSession, path: str, exc: Exception) -> bool:
+    """True only when ``exc`` says the table at ``path`` does not exist
+    yet (a stream's first batch); any other failure must propagate.
+    The error class is matched exactly — matching ``str(exc)`` would
+    miss pre-error-class Sparks and match unrelated errors that merely
+    mention PATH_NOT_FOUND. Without an error class the path is probed.
+    """
+    if not isinstance(exc, AnalysisException):
+        return False
+    cond = getattr(exc, "getCondition", lambda: None)()
+    if cond is not None:
+        return cond == "PATH_NOT_FOUND"
+    fs, hpath = _hadoop_fs(spark, path)
+    return not fs.exists(hpath)
 
 
 #: schemes whose directory rename IS atomic — the compaction swap
@@ -320,7 +370,22 @@ def write_bucketed_table(
     100 TB, where a runtime shuffle of either side is the dominant
     cost. Requires the session catalog (saveAsTable), not a bare
     path — bucket metadata lives in the catalog.
+
+    An interrupted write can leave the table's managed directory
+    behind without a catalog entry; every later write would then fail
+    with LOCATION_ALREADY_EXISTS. So before an overwrite, or any write
+    of a table the catalog does not hold, the table is dropped and its
+    own managed path (the catalog's default location for ``name``,
+    never an external LOCATION) is removed.
     """
+    spark = df.sparkSession
+    if mode == "overwrite" or not spark.catalog.tableExists(name):
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        state = spark._jsparkSession.sessionState()
+        ident = state.sqlParser().parseTableIdentifier(name)
+        fs, managed = _hadoop_fs(spark, str(state.catalog().defaultTablePath(ident)))
+        if fs.exists(managed):
+            fs.delete(managed, True)
     writer = df.write.mode(mode).format(file_format).bucketBy(
         num_buckets, *bucket_cols
     )

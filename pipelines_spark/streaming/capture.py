@@ -15,8 +15,16 @@ Reference semantics reproduced (SURVEY T1/T5/T9, §3.2):
 - capture-log rows appended per batch (success accounting that the
   recapture spine reconciles, SURVEY T4).
 
-Checkpointing supplies the exactly-once-ish contract the reference
-emulates with same-filename re-uploads.
+Replay contract (the reference's same-filename re-upload): raw and
+staging land under ``data=…/hora=…/_batch_id=…``
+(sinks/partitioned.py::write_batch, dynamic partition overwrite).
+``foreachBatch`` is at-least-once, so a batch re-run after a crash
+before its checkpoint commit gets the same batch id and replaces its
+own files; the zones end as one run would leave them. Its partition
+values are replay-stable: the event time, or ``timestamp_captura``,
+which inside a stream is the batch timestamp recorded in the offset
+log. An empty batch writes no files. The capture-log row is an append,
+so a replay may repeat it (sinks/logs.py).
 """
 
 from __future__ import annotations
@@ -26,6 +34,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from pipelines_spark.functions.json_ops import nest_payload
+from pipelines_spark.sinks.logs import write_log_rows
+from pipelines_spark.sinks.partitioned import write_batch
 
 
 def run_capture_stream(
@@ -54,50 +64,37 @@ def run_capture_stream(
         .withColumn("hora", F.date_format(event_ts_col, "HH"))
     )
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()
         try:
-            (
-                batch_df.write.mode("append")
-                .partitionBy("data", "hora")
-                .parquet(raw_path)
-            )
-            staged = nest_payload(
-                batch_df.drop("data", "hora"), keys, capture_ts_col="timestamp_captura"
-            ).withColumns(
-                {
-                    "data": F.date_format(event_ts_col if event_ts_col in keys else "timestamp_captura", "yyyy-MM-dd"),
-                    "hora": F.date_format(event_ts_col if event_ts_col in keys else "timestamp_captura", "HH"),
-                }
-            )
-            (
-                staged.write.mode("append")
-                .partitionBy("data", "hora")
-                .parquet(staging_path)
-            )
-            if log_path:
-                spark = batch_df.sparkSession
-                # K10 shape (sinks/logs.py::LOG_SCHEMA + batch_id),
-                # partitioned by data — the drift monitor appends its
-                # per-window verdicts into the SAME table
-                log = (
-                    spark.createDataFrame(
-                        [(batch_id, True, None)],
-                        "batch_id long, sucesso boolean, erro string",
-                    )
-                    .withColumn("timestamp_captura", F.current_timestamp())
-                    .withColumn(
-                        "data",
-                        F.date_format("timestamp_captura", "yyyy-MM-dd"),
-                    )
+            if not batch_df.isEmpty():
+                write_batch(batch_df, raw_path, batch_id, ["data", "hora"])
+                part_ts = event_ts_col if event_ts_col in keys else "timestamp_captura"
+                staged = nest_payload(
+                    batch_df.drop("data", "hora"), keys, capture_ts_col="timestamp_captura"
+                ).withColumns(
+                    {
+                        "data": F.date_format(part_ts, "yyyy-MM-dd"),
+                        "hora": F.date_format(part_ts, "HH"),
+                    }
                 )
-                log.coalesce(1).write.mode("append").partitionBy(
-                    "data"
-                ).parquet(log_path)
+                write_batch(staged, staging_path, batch_id, ["data", "hora"])
+            if log_path:
+                # the drift monitor logs its per-window verdicts into
+                # the SAME table
+                write_log_rows(
+                    batch_df.sparkSession.range(1).select(
+                        F.current_timestamp().alias("timestamp_captura"),
+                        F.lit(True).alias("sucesso"),
+                        F.lit(None).alias("erro"),
+                        F.lit(batch_id).alias("batch_id"),
+                    ),
+                    log_path,
+                )
         finally:
             batch_df.unpersist()
 
-    writer = deduped.writeStream.foreachBatch(write_batch).option(
+    writer = deduped.writeStream.foreachBatch(sink_batch).option(
         "checkpointLocation", checkpoint_path
     )
     if trigger:

@@ -24,7 +24,7 @@ from pyspark.sql.utils import AnalysisException
 
 from pipelines_spark.operators.dedup import last_row_per_key
 from pipelines_spark.sinks.partitioned import (
-    _hadoop_fs,
+    is_missing_path,
     merge_upsert,
     write_partitioned,
 )
@@ -65,19 +65,8 @@ def run_cdc_upsert_stream(
         except AnalysisException as e:
             # bootstrap ONLY when the table doesn't exist yet; any
             # other analysis error (schema drift, bad columns) must
-            # surface, not silently degrade into an append. Match the
-            # error CLASS exactly — substring-matching str(e) would
-            # both miss pre-error-class Sparks ("Path does not exist")
-            # and false-positive on unrelated errors whose text
-            # happens to mention PATH_NOT_FOUND.
-            cond = getattr(e, "getCondition", lambda: None)()
-            if cond is not None:
-                bootstrap = cond == "PATH_NOT_FOUND"
-            else:
-                # pre-error-class Spark: probe the path itself
-                fs, hpath = _hadoop_fs(batch_df.sparkSession, path)
-                bootstrap = not fs.exists(hpath)
-            if not bootstrap:
+            # surface, not silently degrade into an append
+            if not is_missing_path(batch_df.sparkSession, path, e):
                 raise
             write_partitioned(latest, path, partition_cols, mode="append")
         finally:

@@ -27,6 +27,7 @@ from pipelines_spark.llm.dedup import (
     persist_fingerprints,
     release_staging,
 )
+from pipelines_spark.sinks.partitioned import BATCH_ID_COL, is_missing_path, write_batch
 
 
 def run_incremental_dedup_stream(
@@ -86,21 +87,8 @@ def run_incremental_dedup_stream(
             threshold=threshold,
             staging=staging,
         ).persist()
-        (
-            decisions.withColumn("_batch_id", F.lit(str(batch_id)))
-            .write.mode("overwrite")
-            .partitionBy("_batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(decisions_path)
-        )
-        enriched = batch_df.join(decisions, id_col, "left")
-        (
-            enriched.withColumn("_batch_id", F.lit(str(batch_id)))
-            .write.mode("overwrite")
-            .partitionBy("_batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(corpus_path)
-        )
+        write_batch(decisions, decisions_path, batch_id)
+        write_batch(batch_df.join(decisions, id_col, "left"), corpus_path, batch_id)
         # the batch's fingerprints were already computed (and persisted
         # in-memory) inside incremental_dedup_batch — reuse them for the
         # store advance instead of re-running the 32-hash pipeline
@@ -117,25 +105,9 @@ def run_incremental_dedup_stream(
     )
     if trigger:
         writer = writer.trigger(**trigger)
+    else:
+        writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def _is_missing_path(exc: Exception) -> bool:
-    """True only for the 'first batch, store not created yet' case.
-    Any OTHER read failure (permissions, fs hiccup, corrupt footer)
-    must propagate — silently deduping against an empty store would
-    permanently record wrong keep decisions."""
-    from pyspark.errors import AnalysisException
-
-    if not isinstance(exc, AnalysisException):
-        return False
-    cond = getattr(exc, "getCondition", None) or getattr(
-        exc, "getErrorClass", None
-    )
-    name = cond() if cond else None
-    if name is not None:
-        return name == "PATH_NOT_FOUND"
-    return "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc)
 
 
 def _read_store(
@@ -144,14 +116,17 @@ def _read_store(
     try:
         fps = spark.read.parquet(path)
     except Exception as exc:
-        if _is_missing_path(exc):
+        # only a store not created yet (first batch) reads as empty:
+        # deduping against an empty store after any OTHER failure
+        # would permanently record wrong keep decisions
+        if is_missing_path(spark, path, exc):
             return spark.createDataFrame(
                 [], f"{id_col} long, band_no int, band_key long"
             )
         raise
     # replay guard: a crashed run may have written this batch's own
     # partition already — it must not be probed as "previously seen"
-    return fps.filter(F.col("_batch_id") != batch_id).select(
+    return fps.filter(F.col(BATCH_ID_COL) != batch_id).select(
         id_col, "band_no", "band_key"
     )
 
@@ -167,7 +142,7 @@ def _read_corpus(
     try:
         corpus = spark.read.parquet(path)
     except Exception as exc:
-        if _is_missing_path(exc):
+        if is_missing_path(spark, path, exc):
             return like.select(id_col, text_col).filter(F.lit(False))
         raise
-    return corpus.filter(F.col("_batch_id") != batch_id).select(id_col, text_col)
+    return corpus.filter(F.col(BATCH_ID_COL) != batch_id).select(id_col, text_col)

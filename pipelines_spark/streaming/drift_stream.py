@@ -42,6 +42,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from pipelines_spark.functions.exact import exact_div_round
+from pipelines_spark.sinks.logs import write_log_rows
+from pipelines_spark.sinks.partitioned import write_batch
 
 
 def reference_histogram(
@@ -221,8 +223,9 @@ def run_drift_monitor_stream(
     mode, so a window's histogram rows arrive in exactly one
     micro-batch (at watermark closure) and the PSI finalization +
     log append run batch-locally under the streaming checkpoint.
-    A replayed batch re-appends — same contract as the capture flow's
-    idempotent re-upload (T6), reconciled downstream.
+    The histogram lands in that batch's ``_batch_id`` partition
+    (sinks/partitioned.py::write_batch), so a replayed batch replaces
+    its own rows; its log rows are appended again (sinks/logs.py).
 
     Alert policy: ``psi >= alert_threshold`` fails the window
     (``sucesso = false``, ``erro = "[values_drift]…"``); an all-NULL
@@ -241,12 +244,12 @@ def run_drift_monitor_stream(
         watermark_delay=watermark_delay,
     )
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()
         try:
             if not batch_df.take(1):
                 return
-            batch_df.write.mode("append").parquet(histogram_path)
+            write_batch(batch_df, histogram_path, batch_id)
             scored = psi_per_window(
                 batch_df,
                 shares,
@@ -284,23 +287,21 @@ def run_drift_monitor_stream(
                     ).cast("string"),
                 ),
             )
-            log = scored.select(
-                F.lit(batch_id).cast("long").alias("batch_id"),
-                (~(drift | null_breach)).alias("sucesso"),
-                erro.alias("erro"),
-                F.col("window_start").alias("timestamp_captura"),
-            ).withColumn(
-                "data", F.date_format("timestamp_captura", "yyyy-MM-dd")
-            )
-            log.coalesce(1).write.mode("append").partitionBy("data").parquet(
-                log_path
+            write_log_rows(
+                scored.select(
+                    F.lit(batch_id).alias("batch_id"),
+                    (~(drift | null_breach)).alias("sucesso"),
+                    erro.alias("erro"),
+                    F.col("window_start").alias("timestamp_captura"),
+                ),
+                log_path,
             )
         finally:
             batch_df.unpersist()
 
     writer = (
         counts.writeStream.outputMode("append")
-        .foreachBatch(write_batch)
+        .foreachBatch(sink_batch)
         .option("checkpointLocation", checkpoint_path)
     )
     if trigger:

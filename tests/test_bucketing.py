@@ -168,3 +168,33 @@ def test_incremental_dedup_verification_is_candidate_bounded(spark, sf_small):
     for i in shingle_projs:
         assert "LeftSemi" in lines[i + 1], "\n".join(lines[i : i + 2])
     release_staging(out)
+
+
+@pytest.mark.parametrize("mode", ["overwrite", "append"])
+def test_bucketed_write_over_orphan_location(spark, mode):
+    """An interrupted write leaves ``<warehouse>/<name>/`` behind with
+    no catalog entry. The next write must replace it, not fail with
+    LOCATION_ALREADY_EXISTS, and must leave every other directory of
+    the warehouse alone."""
+    import os
+    import shutil
+    from urllib.parse import urlparse
+
+    name = "orphan_b"
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    stale = os.path.join(warehouse, name)
+    neighbour = os.path.join(warehouse, f"{name}_neighbour")
+    for d in (stale, neighbour):
+        os.makedirs(d, exist_ok=True)
+        spark.range(5).toPandas().to_parquet(os.path.join(d, "part-stale.parquet"))
+    df = spark.range(10).select(F.col("id"), (F.col("id") * 2).alias("v"))
+    try:
+        write_bucketed_table(df, name, ["id"], num_buckets=4, mode=mode)
+        got = sorted(tuple(r) for r in spark.table(name).collect())
+        assert got == [(i, 2 * i) for i in range(10)]
+        assert not os.path.exists(os.path.join(stale, "part-stale.parquet"))
+        assert os.path.exists(os.path.join(neighbour, "part-stale.parquet"))
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        shutil.rmtree(neighbour, ignore_errors=True)

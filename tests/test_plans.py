@@ -221,7 +221,51 @@ def test_widen_scan_conditional_repartition(spark, monkeypatch):
     assert widen_scan(narrow) is narrow
 
 
-def test_register_widens_fact_scans(spark, sf_medium, monkeypatch):
+#: body of test_register_widens_fact_scans, run in its own local[32]
+#: session: the asserted 8-task target must sit under the parallelism
+#: cap, so the suite's session (one slot per host core) cannot hold it
+_WIDEN_SCRIPT = """
+import os
+from pyspark.sql import functions as F
+from pipelines_spark.queries import register
+from pipelines_spark.session import get_spark
+
+spark = get_spark("widen_probe", master="local[32]", shuffle_partitions=32)
+register(spark, SF_MEDIUM, ("lineitem", "nation", "events"))
+plan = (
+    spark.table("lineitem")._jdf.queryExecution().executedPlan().toString()
+)
+assert "hashpartitioning(l_orderkey" in plan, plan
+# right-sized: 8 tasks from the size estimate, NOT the session
+# parallelism (32)
+assert ", 8)" in plan and ", 32)" not in plan, plan
+# a scan whose size-derived target is within 2x of its split
+# count gains nothing (events at sf0.01: ceil(221 KB/128 KB)=2
+# vs 1 existing split — not worth an exchange)
+eplan = (
+    spark.table("events")._jdf.queryExecution().executedPlan().toString()
+)
+assert "hashpartitioning" not in eplan, eplan
+# dims are not widened (they broadcast; an exchange would be waste)
+nplan = spark.table("nation")._jdf.queryExecution().executedPlan().toString()
+assert "Exchange" not in nplan, nplan
+# pushdown reaches the scan THROUGH the widen exchange
+q = spark.table("lineitem").filter(F.col("l_quantity") < 2.0).select("l_orderkey")
+fplan = q._jdf.queryExecution().executedPlan().toString()
+assert "PushedFilters: [IsNotNull(l_quantity), LessThan(l_quantity,2.0)]" in fplan, fplan
+# kill-switch: bare scan again
+os.environ["SPARK_GRAFT_NO_WIDEN"] = "1"
+register(spark, SF_MEDIUM, ("lineitem",))
+plan_off = (
+    spark.table("lineitem")._jdf.queryExecution().executedPlan().toString()
+)
+assert "hashpartitioning" not in plan_off, plan_off
+print("WIDEN OK", flush=True)
+spark.stop()
+"""
+
+
+def test_register_widens_fact_scans(sf_medium):
     """register() (queries.py, r12 guide §2.5 + r13 right-sizing): an
     under-parallel fact-table scan (single-row-group parquet = one
     task) gains ONE hash exchange on the table's unique key — hash,
@@ -231,42 +275,26 @@ def test_register_widens_fact_scans(spark, sf_medium, monkeypatch):
     parallelism), never flat parallelism: a small scan must not fan
     out to near-empty tasks. Small broadcast dims gain nothing.
     Kill-switch restores the bare scan. Filter pushdown must survive
-    the exchange (the scan still carries PushedFilters)."""
-    from pyspark.sql import functions as F
+    the exchange (the scan still carries PushedFilters).
 
-    from pipelines_spark.queries import register
+    Runs in its own 32-slot JVM (``_WIDEN_SCRIPT``), so the result
+    does not depend on the host's core count."""
+    import os
+    import subprocess
+    import sys
 
-    monkeypatch.delenv("SPARK_GRAFT_NO_WIDEN", raising=False)
+    env = dict(os.environ, PYTHONPATH=os.getcwd(), SPARK_GRAFT_DRIVER_MEM="1g")
+    env.pop("SPARK_GRAFT_NO_WIDEN", None)
     # pin the split size so the ~1 MB sf0.01 lineitem maps to a known
     # target: ceil(1042463 / 131072) = 8 tasks — well under the
     # session's 32-way parallelism
-    monkeypatch.setenv("SPARK_GRAFT_WIDEN_SPLIT_BYTES", str(128 * 1024))
-    register(spark, sf_medium, ("lineitem", "nation", "events"))
-    plan = (
-        spark.table("lineitem")._jdf.queryExecution().executedPlan().toString()
+    env["SPARK_GRAFT_WIDEN_SPLIT_BYTES"] = str(128 * 1024)
+    proc = subprocess.run(
+        [sys.executable, "-c", f"SF_MEDIUM = {sf_medium!r}\n" + _WIDEN_SCRIPT],
+        capture_output=True,
+        text=True,
+        env=env,
+        timeout=600,
     )
-    assert "hashpartitioning(l_orderkey" in plan, plan
-    # right-sized: 8 tasks from the size estimate, NOT the session
-    # parallelism (32)
-    assert ", 8)" in plan and ", 32)" not in plan, plan
-    # a scan whose size-derived target is within 2x of its split
-    # count gains nothing (events at sf0.01: ceil(221 KB/128 KB)=2
-    # vs 1 existing split — not worth an exchange)
-    eplan = (
-        spark.table("events")._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "hashpartitioning" not in eplan, eplan
-    # dims are not widened (they broadcast; an exchange would be waste)
-    nplan = spark.table("nation")._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in nplan, nplan
-    # pushdown reaches the scan THROUGH the widen exchange
-    q = spark.table("lineitem").filter(F.col("l_quantity") < 2.0).select("l_orderkey")
-    fplan = q._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [IsNotNull(l_quantity), LessThan(l_quantity,2.0)]" in fplan, fplan
-    # kill-switch: bare scan again
-    monkeypatch.setenv("SPARK_GRAFT_NO_WIDEN", "1")
-    register(spark, sf_medium, ("lineitem",))
-    plan_off = (
-        spark.table("lineitem")._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "hashpartitioning" not in plan_off, plan_off
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert "WIDEN OK" in proc.stdout, proc.stdout[-2000:]

@@ -1,5 +1,5 @@
 """Structured Streaming capture: dedup-within-watermark, dual
-raw/staging sinks, checkpointed exactly-once-ish re-run."""
+raw/staging sinks, checkpointed re-run and replay of a batch id."""
 
 import json
 import os
@@ -54,7 +54,9 @@ def test_capture_stream_dedup_and_dual_sink(spark, tmp_path):
 
     staged = spark.read.parquet(staging)
     rows = staged.collect()
-    assert set(staged.columns) == {"ordem", "content", "timestamp_captura", "data", "hora"}
+    assert set(staged.columns) == {
+        "ordem", "content", "timestamp_captura", "data", "hora", "_batch_id",
+    }
     payload = json.loads([r for r in rows if r["ordem"] == "v1"][0]["content"])
     assert payload["velocidade"] == "10.0"
 
@@ -62,8 +64,8 @@ def test_capture_stream_dedup_and_dual_sink(spark, tmp_path):
     assert log_df.filter(F.col("sucesso")).count() >= 1
 
     # second run with a new source file: checkpoint resumes, appends
-    # only the new data (exactly-once-ish), dups across batches are
-    # dropped within the watermark.
+    # only the new data, dups across batches are dropped within the
+    # watermark.
     _write_source_batch(spark, src, [("v3", 30.0, datetime(2024, 1, 1, 0, 2, 0))])
     q2 = run_capture_stream(
         spark.readStream.schema("ordem string, velocidade double, datahora timestamp").parquet(src),
@@ -76,6 +78,75 @@ def test_capture_stream_dedup_and_dual_sink(spark, tmp_path):
     )
     q2.awaitTermination(120)
     assert spark.read.parquet(raw).count() == 3
+
+
+def _row_multiset(spark, path):
+    df = spark.read.parquet(path)
+    cols = sorted(df.columns)
+    return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+
+def test_capture_stream_replayed_batch_replaces_its_own_files(spark, tmp_path):
+    """foreachBatch is at-least-once: a crash after the sink writes but
+    before the checkpoint commit re-runs the batch under the same id on
+    restart. Raw and staging must then hold exactly the rows of the
+    single run; the log may repeat a row but keeps one success per
+    batch id."""
+    import glob
+
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    paths = dict(
+        raw_path=str(tmp_path / "raw"),
+        staging_path=str(tmp_path / "staging"),
+        checkpoint_path=ckpt,
+        log_path=str(tmp_path / "logs"),
+    )
+
+    def run():
+        q = run_capture_stream(
+            spark.readStream.schema(
+                "ordem string, velocidade double, datahora timestamp"
+            ).parquet(src),
+            keys=["ordem"],
+            event_ts_col="datahora",
+            **paths,
+        )
+        assert q.awaitTermination(120)
+        return [p.batchId for p in q.recentProgress if p.numInputRows > 0]
+
+    _write_source_batch(spark, src, [("v1", 10.0, datetime(2024, 1, 1, 0, 0, 0))])
+    run()
+    _write_source_batch(
+        spark,
+        src,
+        [
+            ("v2", 20.0, datetime(2024, 1, 1, 0, 1, 0)),
+            ("v2", 20.0, datetime(2024, 1, 1, 0, 1, 0)),  # dup
+            ("v3", 30.0, datetime(2024, 1, 1, 1, 5, 0)),  # next hour
+        ],
+    )
+    last = run()[-1]
+    raw_once = _row_multiset(spark, paths["raw_path"])
+    staged_once = _row_multiset(spark, paths["staging_path"])
+    logged_once = {
+        r["batch_id"] for r in spark.read.parquet(paths["log_path"]).collect()
+    }
+    assert len(raw_once) == 3 and len(staged_once) == 3
+
+    # crash before the commit of the last data batch: its commit and
+    # every later offset are gone, its own offsets entry survives
+    for kind, first in (("commits", last), ("offsets", last + 1)):
+        for f in glob.glob(f"{ckpt}/{kind}/*") + glob.glob(f"{ckpt}/{kind}/.*.crc"):
+            name = os.path.basename(f).lstrip(".").removesuffix(".crc")
+            if name.isdigit() and int(name) >= first:
+                os.remove(f)
+    assert run()[0] == last  # the batch really ran again
+
+    assert _row_multiset(spark, paths["raw_path"]) == raw_once
+    assert _row_multiset(spark, paths["staging_path"]) == staged_once
+    log = spark.read.parquet(paths["log_path"]).collect()
+    assert all(r["sucesso"] for r in log)
+    assert {r["batch_id"] for r in log} == logged_once
 
 
 def test_streaming_session_window(spark, tmp_path):
@@ -127,46 +198,6 @@ def test_streaming_session_window(spark, tmp_path):
     assert (2, 1, 7.0) in sessions
     # the last session (user 1 at 14:00) stays open — append mode
     assert (1, 1, 5.0) not in sessions
-
-
-def test_capture_log_listener(spark, tmp_path):
-    """K10 via the listener bus: per-batch progress rows buffered and
-    flushed to the capture-log table."""
-    from pipelines_spark.streaming.listener import CaptureLogListener
-
-    src_dir = tmp_path / "in"
-    src_dir.mkdir()
-    spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string").coalesce(
-        1
-    ).write.mode("overwrite").parquet(str(src_dir))
-
-    listener = CaptureLogListener()
-    spark.streams.addListener(listener)
-    try:
-        q = (
-            spark.readStream.schema("id long, s string")
-            .parquet(str(src_dir))
-            .writeStream.format("noop")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        # progress events arrive async on the bus — poll briefly
-        import time
-
-        log_path = str(tmp_path / "logs")
-        total = 0
-        for _ in range(40):
-            total += listener.flush(spark, log_path)
-            if total:
-                break
-            time.sleep(0.25)
-    finally:
-        spark.streams.removeListener(listener)
-
-    log = spark.read.parquet(log_path)
-    assert log.filter("sucesso AND num_input_rows = 2").count() >= 1
 
 
 def test_streaming_tumbling_window_agg(spark, tmp_path):
