@@ -454,6 +454,7 @@ def run_curation_flow_transactional(
     import time as _time
 
     from pipelines_spark.llm.curation import curate_corpus
+    from pipelines_spark.llm.dedup import release_staging
     from pipelines_spark.plans.checks import Check, run_checks
     from pipelines_spark.sinks.snapshots import (
         publish_snapshot,
@@ -463,9 +464,13 @@ def run_curation_flow_transactional(
 
     clock = clock or _time.time
     curated, stats = curate_corpus(docs, config, collect_stats=True)
-    stage_id = snapshot_write_staged(
-        spark, table_path, curated, mode="append", clock=clock
-    )
+    try:
+        stage_id = snapshot_write_staged(
+            spark, table_path, curated, mode="append", clock=clock
+        )
+    finally:
+        # the staged write is the corpus's only action: free its cache
+        release_staging(curated)
 
     staged_snapshot_read(spark, table_path, stage_id).createOrReplaceTempView(
         "_staged_corpus"

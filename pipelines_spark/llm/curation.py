@@ -27,9 +27,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pipelines_spark.llm.dedup import (
+    _attach_staging,
     connected_components,
     exact_dedup,
     minhash_near_dup_pairs,
+    release_staging,
 )
 from pipelines_spark.llm.sampling import (
     assign_split,
@@ -132,24 +134,20 @@ def curate_corpus(
     Cache lifecycle: intermediate persists are released before
     return; the final canonical frame stays cached (the returned
     DataFrame is a projection over it, so follow-up actions — the
-    normal case: write-to-lake next — reuse stages 1-3). Long-lived
-    applications curating many corpora should
-    ``spark.catalog.clearCache()`` between corpora, or pass
-    ``collect_stats=False`` (which skips persisting entirely).
+    normal case: write-to-lake next — reuse stages 1-3) and is
+    recorded on ``curated``: call ``llm/dedup.py::release_staging``
+    on it once the corpus is written. ``collect_stats=False`` skips
+    persisting entirely.
     """
     cfg = config or CurationConfig()
     id_c, text_c = cfg.id_col, cfg.text_col
     spark = docs.sparkSession
 
-    # r12 (guide §2.5): single-row-group / tiny-file inputs scan as
-    # ONE partition, pinning every map-only gate (quality/lang/token
-    # scoring, shingling) to one core; widen_scan round-robins the
-    # input once when — and only when — the scan is under-parallel
-    # (no-op on any real multi-split table), and every downstream
-    # stage boundary inherits the parallel layout.
-    from pipelines_spark.plans.staging import widen_scan
-
-    docs = widen_scan(docs)
+    # docs keeps the caller's partitioning: a registered table arrives
+    # widened by queries.register (guide §2.5, size-derived split
+    # count), the one place a scan is split; every downstream stage
+    # boundary inherits that layout, and a small single-split input
+    # stays unsplit (no fan-out to near-empty tasks).
 
     def persist(df: DataFrame) -> DataFrame:
         # stats path: explicit persist + unpersist (we control when
@@ -185,6 +183,8 @@ def curate_corpus(
     gated = persist(gated)
     if collect_stats:
         counts.append(("quality_lang_gate", gated.count()))
+    # every superseded stage frame, unpersisted on the stats path
+    released: list[DataFrame] = []
 
     # 1b. optional linear-classifier gate. Two equivalent
     # formulations exist (equality pinned in tests): the map-only HOF
@@ -231,6 +231,7 @@ def curate_corpus(
         keep = scores.filter(
             F.col("_score") >= cfg.min_classifier_score
         ).select(id_c)
+        released.append(gated)
         gated = persist(gated.join(keep, id_c, "semi"))
         if collect_stats:
             counts.append(("classifier_gate", gated.count()))
@@ -239,6 +240,7 @@ def curate_corpus(
     # key, WindowGroupLimit-bounded) — before the dedup stages so
     # their shuffles see the already-shrunk, head-domain-free corpus
     if cfg.max_per_source is not None:
+        released.append(gated)
         gated = persist(
             cap_per_source(
                 gated,
@@ -263,7 +265,6 @@ def curate_corpus(
     # post-exact-dedup corpus (CCNet order: dedup before the LM so
     # duplicated boilerplate can't dominate the model it is judged
     # by). Both are linear aggregate+join passes.
-    released: list[DataFrame] = []
     if cfg.max_entropy_bits is not None:
         from pipelines_spark.llm.text import ngram_cross_entropy
 
@@ -330,7 +331,7 @@ def curate_corpus(
     w = Window.partitionBy("component_id").orderBy(
         F.col("quality").desc(), F.col(id_c).asc()
     )
-    curated = persist(
+    canonical = curated = persist(
         labeled.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
@@ -354,9 +355,10 @@ def curate_corpus(
         # the LSH staging tables (shingles, banded keys) are persisted
         # inside minhash_near_dup_pairs; the canonical count above has
         # materialized everything that needs them
-        from pipelines_spark.llm.dedup import release_staging
-
         release_staging(pairs)
+        # the caller owns the cached canonical frame: release_staging
+        # (curated) after its last action
+        curated = _attach_staging(curated, (canonical,))
         stats = spark.createDataFrame(counts, "stage string, n_docs long")
     else:
         stats = None

@@ -37,7 +37,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 
 from pipelines_spark.functions.exact import exact_div_round
-from pipelines_spark.plans.staging import widen_scan
 from pyspark.sql import functions as F
 
 _LOG = logging.getLogger("pipelines_spark.llm.dedup")
@@ -94,23 +93,25 @@ def word_shingles(text: Column | str, n: int = 3) -> Column:
 def _shingled(
     df: DataFrame, id_col: str, text_col: str, shingle_words: int
 ) -> DataFrame:
-    """Shared head of every shingle operator: widen the scan, drop
-    texts too short to shingle, project the shingle set.
+    """Shared head of every shingle operator: drop texts too short to
+    shingle, project the shingle set. The input keeps the caller's
+    partitioning — a registered table arrives already widened by
+    ``queries.register``, the one place a scan is split.
 
     The emptiness guard is the EQUIVALENT cheap predicate
     ``size(split(text, ' ')) >= n`` on the raw text, NOT
     ``size(shingles) > 0`` on the projected column (r13, guide §4.4's
     duplicated-evaluation disease in pure-SQL form): a filter that
-    references the shingle expression gets pushed BELOW the widen
-    exchange, so the whole shingle computation ran a second time ON
-    THE SERIAL SCAN TASK — measured 16 s serial vs 1.5 s parallel on
+    references the shingle expression gets pushed BELOW the scan's
+    widen exchange, so the whole shingle computation ran a second time
+    ON THE SERIAL SCAN TASK — measured 16 s serial vs 1.5 s parallel on
     a 10× corpus, dominating every cold dedup build. Equivalence:
     ``word_shingles`` returns ``[]`` exactly when ``size(words) < n``
     (the guard branch), and otherwise emits ≥ 1 window, so the two
     predicates accept identical rows (NULL text is dropped by
     both)."""
     t = F.col(text_col) if isinstance(text_col, str) else text_col
-    return widen_scan(df).filter(
+    return df.filter(
         F.size(F.split(t, " ")) >= shingle_words
     ).select(
         F.col(id_col), word_shingles(text_col, shingle_words).alias("_shingles")
@@ -676,13 +677,14 @@ def incremental_dedup_batch(
     # the frame — a long-lived ingestion loop calling this per batch
     # must not accrete CacheManager entries (release_staging stays a
     # harmless no-op on it)
-    # NOT widened (widen_scan): all_docs is already candidate-pruned
-    # by the semi-joins above, and the structural pin
+    # NOT repartitioned: all_docs is already candidate-pruned by the
+    # semi-joins above, and the structural pin
     # (test_bucketing.py: shingle Project DIRECTLY above LeftSemi)
     # guarantees the store corpus is never shingled in full — a
     # repartition between them would break the pin for no measured
     # gain (6.34 s → 6.63 s when tried; the operator's heavy side is
-    # the fingerprint pipeline, which minhash_fingerprints widens).
+    # the fingerprint pipeline, which keeps its input's partitioning:
+    # queries.register widens a registered scan, nothing else does).
     sets = _maybe_stage(
         all_docs.select(
             F.col(id_col), word_shingles(text_col, shingle_words).alias("_sh")

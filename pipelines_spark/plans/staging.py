@@ -35,38 +35,6 @@ from pyspark.sql import DataFrame
 STAGING_MODES = ("local", "checkpoint")
 
 
-def widen_scan(df: DataFrame, target: int | None = None) -> DataFrame:
-    """Round-robin repartition an input whose SCAN produced far fewer
-    partitions than the session's parallelism — the guide §2.5
-    "input skew" remedy (one huge unsplittable file / single-row-group
-    parquet / gzip: repartition immediately after the read) made
-    scale-adaptive: a no-op whenever the scan is already at least
-    half-parallel, which is every real multi-row-group/multi-file
-    table, so the exchange exists ONLY where the input's physical
-    layout would otherwise pin the whole map side of the operator to
-    one core.
-
-    Why it matters here (r12, measured): the bench corpora are
-    single-row-group parquet files, so every scan is ONE task and all
-    map-side work riding it — shingling, text gates, hash projections
-    — ran 1/32-parallel. The repartition moves a few hundred KB once
-    and parallelizes everything downstream of it (including persisted
-    staging tables, whose block count it sets). Rows only ever carry
-    (id, payload) through a round-robin exchange — no keyed semantics
-    — and every consumer in this repo is partitioning-order-exact by
-    the rounding/integer-sum discipline, so results are unchanged.
-    """
-    import os
-
-    if os.environ.get("SPARK_GRAFT_NO_WIDEN"):  # measurement kill-switch
-        return df
-    sc = df.sparkSession.sparkContext
-    n = target or sc.defaultParallelism
-    if df.rdd.getNumPartitions() * 2 >= n:
-        return df
-    return df.repartition(n)
-
-
 def stage(df: DataFrame, *, eager: bool = True, staging: str = "local") -> DataFrame:
     """Materialize ``df`` (or lazily mark it for materialization at
     its first action when ``eager=False``) and cut its lineage, under

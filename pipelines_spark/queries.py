@@ -92,6 +92,10 @@ ALL_TABLES = (
 def register(spark: SparkSession, sf_dir: str, tables=ALL_TABLES) -> None:
     """Register sf_dir tables as temp views.
 
+    This is the only place a scan is widened: an under-split fact
+    table gains one size-derived hash exchange here, and every
+    operator downstream keeps the partitioning it is handed.
+
     ``events.ts`` is schema-adaptive: generator versions that write
     nanosecond parquet timestamps are read as long
     (spark.sql.legacy.parquet.nanosAsLong — Spark's vectorized reader
@@ -237,13 +241,17 @@ _WIDEN_SPLIT_BYTES = 512 * 1024
 
 
 def _widen_split_bytes() -> int | None:
-    """The widen split size, or ``None`` when widening is off."""
+    """The widen split size, or ``None`` when widening is off. Raises
+    ``ValueError`` when ``SPARK_GRAFT_WIDEN_SPLIT_BYTES`` is not a
+    positive integer."""
     if os.environ.get("SPARK_GRAFT_NO_WIDEN"):  # measurement kill-switch
         return None
-    try:
-        return int(os.environ.get("SPARK_GRAFT_WIDEN_SPLIT_BYTES", _WIDEN_SPLIT_BYTES))
-    except ValueError:  # pragma: no cover
-        return _WIDEN_SPLIT_BYTES
+    raw = os.environ.get("SPARK_GRAFT_WIDEN_SPLIT_BYTES", str(_WIDEN_SPLIT_BYTES))
+    if not (raw.isdecimal() and int(raw) > 0):
+        raise ValueError(
+            f"SPARK_GRAFT_WIDEN_SPLIT_BYTES must be a positive integer, got {raw!r}"
+        )
+    return int(raw)
 
 
 def _widen_target(df: DataFrame, parallelism: int, table: str, split: int) -> int | None:

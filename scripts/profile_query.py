@@ -1,7 +1,8 @@
-"""Round-12 profiling harness (guide §1: measure first).
+"""Per-query profiling harness (guide §1: measure first).
 
 For each named query: capture ``.explain("formatted")`` to
-``plans/r12/<name>_<tag>.txt``, run it N times through the noop sink
+``plans/<round_dir>/<name>_<tag>.txt`` (``round_dir`` defaults to
+``r13``), run it N times through the noop sink
 (same methodology as bench.py), and report per-run wall clock plus
 job/stage/task counts from the status tracker — the per-query
 "how many jobs and exchanges did this really run" number that the

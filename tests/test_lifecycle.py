@@ -414,10 +414,11 @@ def test_dedup_operators_release_staging_caches(spark, sf_medium):
 
     docs = spark.read.parquet(f"{sf_medium}/documents.parquet").limit(300)
 
-    def n_persisted():
-        return spark.sparkContext._jsc.getPersistentRDDs().size()
+    def persisted() -> set:
+        # ids, not a count: the ContextCleaner may free an earlier
+        # test's lazily staged blocks at any point during this one
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
-    base = n_persisted()
     ops = [
         lambda: minhash_near_dup_pairs(docs, id_col="doc_id", text_col="text"),
         lambda: ngram_jaccard_pairs(
@@ -426,12 +427,14 @@ def test_dedup_operators_release_staging_caches(spark, sf_medium):
         lambda: simhash_pairs(docs, id_col="doc_id", text_col="text"),
     ]
     for build in ops:
+        before = persisted()
         out = build()
         out.count()  # materialize while staging is cached
-        assert n_persisted() > base
+        added = persisted() - before
+        assert added
         released = release_staging(out)
         assert released >= 1
-        assert n_persisted() == base
+        assert not added & persisted()
         assert release_staging(out) == 0  # idempotent
 
 

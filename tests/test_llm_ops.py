@@ -1977,14 +1977,19 @@ def test_curate_corpus_optional_stat_gates(spark):
     assert "dup_span_gate" in [r["stage"] for r in stats2.collect()]
     assert 200 not in kept2 and 201 not in kept2
     assert set(range(5)) <= kept2
-    # cache hygiene: every gate staging frame was explicitly released
-    # (the returned canonical frame itself may stay cached by design,
-    # and connected_components' localCheckpoint blocks free on GC)
+    # cache hygiene: every gate staging frame was explicitly released;
+    # the canonical frame under the output stays cached for the
+    # caller, recorded on it, until release_staging (connected_
+    # components' localCheckpoint blocks free on GC)
     from pyspark import StorageLevel
 
+    from pipelines_spark.llm.dedup import release_staging
+
     for df_out in (curated, curated2):
-        for frame in getattr(df_out, "_staged_frames", ()):  # none expected
-            assert frame.storageLevel == StorageLevel.NONE
+        (canonical,) = df_out._staged_frames
+        assert canonical.storageLevel != StorageLevel.NONE
+        assert release_staging(df_out) == 1
+        assert canonical.storageLevel == StorageLevel.NONE
 
 
 def test_containment_posting_list_cap(spark, caplog):

@@ -195,39 +195,14 @@ def test_dump_flow_enrichment_uses_advisor(spark, tmp_path):
     spark.sql("DROP TABLE IF EXISTS dump_enriched_staging")
 
 
-def test_widen_scan_conditional_repartition(spark, monkeypatch):
-    """widen_scan (plans/staging.py, r12 guide §2.5): under-parallel
-    inputs gain ONE round-robin exchange up to defaultParallelism;
-    already-parallel inputs (≥ half of it) pass through untouched —
-    so at real scale (multi-split tables) the helper is a no-op and
-    the exchange exists only where the file layout would pin the map
-    side to one core. Results are row-identical either way."""
-    from pipelines_spark.plans.staging import widen_scan
-
-    monkeypatch.delenv("SPARK_GRAFT_NO_WIDEN", raising=False)
-    n = spark.sparkContext.defaultParallelism
-    rows = [(i, f"doc {i}") for i in range(100)]
-    narrow = spark.createDataFrame(rows, "id long, text string").coalesce(1)
-    widened = widen_scan(narrow)
-    assert widened.rdd.getNumPartitions() == n
-    assert "Repartition" in widened._jdf.queryExecution().optimizedPlan().toString()
-    # row-identical (round-robin moves rows, never changes them)
-    assert sorted(map(tuple, widened.collect())) == sorted(map(tuple, narrow.collect()))
-    # already-parallel input: identity (no exchange added)
-    wide = spark.createDataFrame(rows, "id long, text string").repartition(n)
-    assert widen_scan(wide) is wide
-    # measurement kill-switch: identity regardless of layout
-    monkeypatch.setenv("SPARK_GRAFT_NO_WIDEN", "1")
-    assert widen_scan(narrow) is narrow
-
-
 #: body of test_register_widens_fact_scans, run in its own local[32]
 #: session: the asserted 8-task target must sit under the parallelism
 #: cap, so the suite's session (one slot per host core) cannot hold it
 _WIDEN_SCRIPT = """
 import os
+import re
 from pyspark.sql import functions as F
-from pipelines_spark.queries import register
+from pipelines_spark.queries import QUERIES, register
 from pipelines_spark.session import get_spark
 
 spark = get_spark("widen_probe", master="local[32]", shuffle_partitions=32)
@@ -253,6 +228,25 @@ assert "Exchange" not in nplan, nplan
 q = spark.table("lineitem").filter(F.col("l_quantity") < 2.0).select("l_orderkey")
 fplan = q._jdf.queryExecution().executedPlan().toString()
 assert "PushedFilters: [IsNotNull(l_quantity), LessThan(l_quantity,2.0)]" in fplan, fplan
+# register is the only place a scan is widened: an operator keeps the
+# split it is handed. documents at the pinned split: ceil(65049 B x
+# weight 16 / 128 KiB) = 8 tasks, so the shingle operator's only
+# widen exchange is register's, and building it runs no Spark job
+register(spark, SF_MEDIUM, ("documents",))
+sc = spark.sparkContext
+sc.setJobGroup("widen-build", "dedup_ngram_jaccard build")
+dplan = QUERIES["dedup_ngram_jaccard"](spark, SF_MEDIUM)._jdf.queryExecution().executedPlan().toString()
+sc.setLocalProperty("spark.jobGroup.id", None)
+assert list(sc.statusTracker().getJobIdsForGroup("widen-build")) == []
+widen = re.findall(r"Exchange (.*?), REPARTITION_BY_NUM", dplan)
+assert {re.sub(r"#\\d+L?", "", w) for w in widen} == {"hashpartitioning(doc_id, 8)"}, dplan
+# at the default split register declines to widen documents (2
+# tasks vs its 1 split), and no operator fans it out to 32 tasks
+del os.environ["SPARK_GRAFT_WIDEN_SPLIT_BYTES"]
+for name in ("dedup_ngram_jaccard", "dedup_minhash_lsh", "curation_pipeline"):
+    df = QUERIES[name](spark, SF_MEDIUM)
+    fmt = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    assert "RoundRobinPartitioning" not in fmt, (name, fmt)
 # kill-switch: bare scan again
 os.environ["SPARK_GRAFT_NO_WIDEN"] = "1"
 register(spark, SF_MEDIUM, ("lineitem",))
@@ -275,7 +269,9 @@ def test_register_widens_fact_scans(sf_medium):
     parallelism), never flat parallelism: a small scan must not fan
     out to near-empty tasks. Small broadcast dims gain nothing.
     Kill-switch restores the bare scan. Filter pushdown must survive
-    the exchange (the scan still carries PushedFilters).
+    the exchange (the scan still carries PushedFilters). The operators
+    keep the split register chose: the shingle and curation queries
+    add no round-robin exchange, and building one runs no Spark job.
 
     Runs in its own 32-slot JVM (``_WIDEN_SCRIPT``), so the result
     does not depend on the host's core count."""

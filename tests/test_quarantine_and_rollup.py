@@ -171,10 +171,14 @@ def test_transactional_curation_flow_wap(spark, tmp_path, sf_small):
     docs = spark.read.parquet(f"{sf_small}/documents.parquet").select(
         "doc_id", "text", "source"
     )
+    # the flow owns the corpus it caches: none left behind
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
     r = run_curation_flow_transactional(
         spark, docs, table_path=table,
         config=CurationConfig(**BENCH_CONFIG), min_docs=10,
     )
+    assert cm.isEmpty()
     assert r["published"] is True and r["version"] == 1
     stats = dict(r["stats"])
     assert stats["input"] == 500
@@ -187,6 +191,7 @@ def test_transactional_curation_flow_wap(spark, tmp_path, sf_small):
         spark, docs, table_path=table,
         config=CurationConfig(**BENCH_CONFIG), min_docs=10**9,
     )
+    assert cm.isEmpty()
     assert r2["published"] is False and r2["failed_checks"] == ["min_docs"]
     assert current_version(spark, table) == 1
     assert snapshot_read(spark, table).count() == stats["near_dup_canonical"]

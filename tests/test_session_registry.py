@@ -70,6 +70,11 @@ def test_no_widen_between_calls_gives_unwidened_plan(spark, sf_medium, monkeypat
     monkeypatch.delenv("SPARK_GRAFT_NO_WIDEN")
     register(spark, sf_medium, ("lineitem",))
     assert "hashpartitioning(l_orderkey" in _plan(spark.table("lineitem"))
+    # a split size that is not a positive integer is refused by name
+    for bad in ("0", "-1", "abc"):
+        monkeypatch.setenv("SPARK_GRAFT_WIDEN_SPLIT_BYTES", bad)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_WIDEN_SPLIT_BYTES"):
+            register(spark, sf_medium, ("lineitem",))
 
 
 def test_new_session_never_gets_stopped_sessions_frame(sf_small):
