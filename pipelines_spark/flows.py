@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from pipelines_spark.functions.datetime_ops import derive_partition_columns
 from pipelines_spark.functions.json_ops import nest_payload
+from pipelines_spark.llm.dedup import release_staging
 from pipelines_spark.naming import normalize_columns
 from pipelines_spark.operators.spine import find_gaps, time_spine
 from pipelines_spark.plans.models import ModelRunner
@@ -98,15 +99,26 @@ def run_dump_flow(
     date_norm = normalize_column_name(date_col)
     df = derive_partition_columns(df, date_norm)
     staged = to_all_string(df)
-    write_partitioned(
-        staged,
-        lake_path,
-        list(partition_cols),
-        mode=mode,
-        sort_cols=[date_norm] if sort_by_date else None,
-    )
+    try:
+        write_partitioned(
+            staged,
+            lake_path,
+            list(partition_cols),
+            mode=mode,
+            sort_cols=[date_norm] if sort_by_date else None,
+        )
+    finally:
+        # the write is the source's only action: free a quarantine
+        # read's cached scan (sources/files.py::read_with_quarantine)
+        release_staging(source_df)
     create_staging_table(spark, staging_table, lake_path)
-    return spark.table(staging_table)
+    table = spark.table(staging_table)
+    if set(table.columns) != set(staged.columns):
+        # the dump changed the lake's columns: infer them again
+        spark.sql(f"DROP TABLE IF EXISTS {staging_table}")
+        create_staging_table(spark, staging_table, lake_path)
+        table = spark.table(staging_table)
+    return table
 
 
 def _floor_to_partition_grain(ts: datetime | None, partition_cols) -> datetime | None:
@@ -403,7 +415,10 @@ def run_dump_flow_transactional(
     clock = clock or _time.time
     df = normalize_columns(source_df)
     df = derive_partition_columns(df, normalize_column_name(date_col))
-    stage_id = snapshot_write_staged(spark, table_path, df, mode=mode, clock=clock)
+    try:
+        stage_id = snapshot_write_staged(spark, table_path, df, mode=mode, clock=clock)
+    finally:
+        release_staging(source_df)
 
     failed: list[str] = []
     if checks:
@@ -454,7 +469,6 @@ def run_curation_flow_transactional(
     import time as _time
 
     from pipelines_spark.llm.curation import curate_corpus
-    from pipelines_spark.llm.dedup import release_staging
     from pipelines_spark.plans.checks import Check, run_checks
     from pipelines_spark.sinks.snapshots import (
         publish_snapshot,

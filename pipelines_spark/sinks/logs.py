@@ -11,7 +11,7 @@ Every row goes through ``write_log_rows``, which owns the schema and
 the ``data`` partition. Its producers:
 
 - ``append_capture_log``: capture windows, recaptures and maintenance
-  runs (flows.py), ``batch_id`` NULL;
+  runs (flows.py), ``batch_id`` NULL, built by ``literal_rows``;
 - streaming/capture.py: one success row per micro-batch, stamped with
   its ``batch_id``;
 - streaming/drift_stream.py: one verdict row per closed monitor
@@ -19,6 +19,13 @@ the ``data`` partition. Its producers:
 
 One schema for every producer means a plain (non-mergeSchema) read
 sees every column regardless of which file's footer Spark samples.
+
+Bookkeeping rows built on the driver (this table's batch rows, the
+watermark store's rows) go through ``literal_rows``: typed literal
+columns over a one-partition range, all in the JVM. A Python
+``createDataFrame`` would convert each row in a Python worker (and
+start that worker on a session's first call), which cost more than
+the one-row write itself.
 
 Rows are appended, never replaced: a micro-batch replayed after a
 crash before its checkpoint commit logs its row again, with the same
@@ -59,10 +66,11 @@ def write_log_rows(rows: DataFrame, path: str) -> None:
     table at ``path``, partitioned by the ``data`` of their
     ``timestamp_captura``, in one file per append.
 
-    ``repartition(1)``, not ``coalesce(1)``: coalescing would also run
-    the row conversion of a ``createDataFrame`` list (one Python worker
-    pass per input slice) serially in the single write task, which
-    measured about twice as slow for a one-row append."""
+    ``repartition(1)``, not ``coalesce(1)``: the drift monitor's
+    verdict rows come out of an aggregation, whose reduce stage a
+    coalesce would pull into the single write task. On a one-partition
+    ``literal_rows`` relation the extra exchange is cheap (about 0.03 s
+    of a 0.2 s one-row append on ``local[4]``)."""
     (
         rows.select(*(F.col(f.name).cast(f.dataType) for f in LOG_SCHEMA))
         .withColumn("data", F.date_format("timestamp_captura", "yyyy-MM-dd"))
@@ -70,6 +78,24 @@ def write_log_rows(rows: DataFrame, path: str) -> None:
         .write.mode("append")
         .partitionBy("data")
         .parquet(path)
+    )
+
+
+def literal_rows(
+    spark: SparkSession, schema: T.StructType, rows: list[tuple]
+) -> DataFrame:
+    """``rows`` as a one-partition frame of ``schema``, built from
+    literal columns in the JVM: no Python worker, no Spark job until
+    an action. Each value is cast to its field's type; a naive
+    ``datetime`` becomes a timestamp by the same local-time conversion
+    ``createDataFrame`` applies, so the stored instants are identical.
+    An empty ``rows`` gives an empty frame of ``schema``."""
+    structs = [
+        F.struct(*(F.lit(v).cast(f.dataType).alias(f.name) for v, f in zip(r, schema)))
+        for r in rows
+    ]
+    return spark.range(1, numPartitions=1).select(
+        F.inline(F.array(*structs) if structs else F.array().cast(T.ArrayType(schema)))
     )
 
 
@@ -82,9 +108,10 @@ def append_capture_log(
     error: str | None = None,
     recapture: bool = False,
 ) -> None:
-    """Append one log row per captured timestamp."""
+    """Append one log row per captured timestamp, built by
+    ``literal_rows`` and written by ``write_log_rows``."""
     err = error
     if recapture:
         err = f"[recapturado]{error or ''}"
     rows = [(ts, success, err, None) for ts in timestamps]
-    write_log_rows(spark.createDataFrame(rows, LOG_SCHEMA), path)
+    write_log_rows(literal_rows(spark, LOG_SCHEMA, rows), path)

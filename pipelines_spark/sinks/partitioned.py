@@ -24,6 +24,10 @@ touches only affected partitions, never the whole table.
 
 from __future__ import annotations
 
+import threading
+import weakref
+from urllib.parse import unquote
+
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -170,8 +174,6 @@ def _walk_partition_dirs(fs, root, partition_cols):
     whose segments are structural ``col=value`` pairs, via the Hadoop
     FileSystem API (works on file://, hdfs://, s3a://, …). Staging and
     bookkeeping entries (underscore/dot-prefixed) are never entered."""
-    from urllib.parse import unquote
-
     stack = [(root, [], {})]
     while stack:
         cur, segs, vals = stack.pop()
@@ -344,12 +346,93 @@ def create_staging_table(
     file_format: str = "parquet",
 ) -> None:
     """Register an unmanaged table over lake files (external-table
-    equivalent, reference pipelines/rj_smtr/utils.py:95-133)."""
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    spark.sql(
-        f"CREATE TABLE {name} USING {file_format} LOCATION '{path}'"
+    equivalent, reference pipelines/rj_smtr/utils.py:95-133), once per
+    session, then keep its partitions in step with the lake.
+
+    The first call in a session for ``name``, or a call that re-points
+    it at another ``path``, drops and creates the table (inferring its
+    columns from the files) and runs one ``MSCK REPAIR TABLE``, which
+    lists every file of the lake. A later call asks the Hadoop
+    FileSystem for the partition directories (a driver-side listing,
+    no Spark job), adds only those the catalog lacks, drops the ones
+    whose directory is gone, and refreshes the table so that files a
+    replay rewrote inside a known partition are read. Its cost grows
+    with the partitions a dump added, not with the lake's history.
+
+    The table's columns are the ones its registration inferred; a
+    caller whose dump changed them re-registers (``run_dump_flow``
+    does)."""
+    fs, root = _hadoop_fs(spark, path)
+    key = (str(root), file_format)
+    with _STAGING_LOCK:
+        tables = _STAGING.setdefault(spark, {})
+        registered = tables.get(name) == key
+    partition_cols = _registered_partition_cols(spark, name, root) if registered else None
+    if partition_cols is None:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        spark.sql(
+            f"CREATE TABLE {name} USING {file_format} LOCATION '{path}'"
+        )
+        spark.sql(f"MSCK REPAIR TABLE {name}")
+        with _STAGING_LOCK:
+            tables[name] = key
+        return
+    if partition_cols:
+        on_disk = {
+            tuple(vals[c] for c in partition_cols)
+            for _rel, vals, _dir in _walk_partition_dirs(fs, root, partition_cols)
+        }
+        known = {
+            _partition_values(r["partition"])
+            for r in spark.sql(f"SHOW PARTITIONS {name}").collect()
+        }
+
+        def specs(values, sep):
+            return sep.join(
+                "PARTITION ("
+                + ", ".join(f"`{c}` = {_sql_string(v)}" for c, v in zip(partition_cols, vs))
+                + ")"
+                for vs in sorted(values)
+            )
+
+        if on_disk - known:
+            spark.sql(f"ALTER TABLE {name} ADD IF NOT EXISTS {specs(on_disk - known, ' ')}")
+        if known - on_disk:
+            spark.sql(f"ALTER TABLE {name} DROP IF EXISTS {specs(known - on_disk, ', ')}")
+    spark.catalog.refreshTable(name)
+
+
+#: session -> {staging table name: (qualified location, file format)}
+#: of the tables ``create_staging_table`` registered; weak on the
+#: session, so a stopped session's record goes with it
+_STAGING: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_STAGING_LOCK = threading.Lock()
+
+
+def _registered_partition_cols(spark: SparkSession, name: str, root) -> list[str] | None:
+    """The partition columns of catalog table ``name`` if it still
+    exists at ``root``; None if it is gone or was re-created elsewhere
+    (catalog metadata only, no Spark job)."""
+    if not spark.catalog.tableExists(name):
+        return None
+    state = spark._jsparkSession.sessionState()
+    meta = state.catalog().getTableMetadata(state.sqlParser().parseTableIdentifier(name))
+    if str(_hadoop_fs(spark, meta.location().toString())[1]) != str(root):
+        return None
+    cols = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+        meta.partitionColumnNames()
     )
-    spark.sql(f"MSCK REPAIR TABLE {name}")
+    return list(cols)
+
+
+def _sql_string(value: str) -> str:
+    """``value`` as a SQL string literal."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _partition_values(rel: str) -> tuple[str, ...]:
+    """The values of a ``k=v/…`` partition path, unescaped."""
+    return tuple(unquote(seg.partition("=")[2]) for seg in rel.split("/"))
 
 
 def write_bucketed_table(

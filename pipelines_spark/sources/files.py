@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pipelines_spark.llm.dedup import _attach_staging
 from pipelines_spark.naming import normalize_columns
 
 
@@ -93,10 +94,15 @@ def read_with_quarantine(
     If ``quarantine_path`` is given the bad rows are also appended
     there (parquet) before returning — the dead-letter zone.
 
-    Spark refuses to filter on ONLY the internal corrupt column over a
-    lazy scan (it would require re-parsing); the scan is cached for
-    the two filtered branches — call ``.unpersist()`` on either
-    returned frame's source when done, or let LRU handle it.
+    The scan is cached once for the two filtered branches and recorded
+    on ``good``: whoever consumes ``good`` releases it with
+    ``llm/dedup.py::release_staging(good)`` once its write is done, as
+    ``flows.run_dump_flow`` and ``run_dump_flow_transactional`` do. A
+    caller who re-reads ``bad`` after that re-parses the file and gets
+    the same rows. A re-read of ``good`` does too if it reads every
+    column; one that selects a subset is judged by Spark's CSV column
+    pruning on that subset alone, so take such a projection before the
+    release.
     """
     opts = {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"}
     opts.update(options or {})
@@ -116,10 +122,18 @@ def read_with_quarantine(
     good = df.filter(F.col("_corrupt_record").isNull()).drop(
         "_corrupt_record", "_source_file"
     )
+    # the fallback is never chosen (the row is corrupt), but it makes a
+    # re-parse after the cache is released read every column: Spark
+    # refuses a scan of the corrupt-record column alone, and its CSV
+    # column pruning would judge a row by the columns read only
+    raw = F.coalesce(
+        F.col("_corrupt_record"),
+        F.concat_ws(",", *(F.col(c).cast("string") for c in scan.columns[:-1])),
+    )
     bad = df.filter(F.col("_corrupt_record").isNotNull()).select(
-        F.col("_corrupt_record").alias("raw_record"),
+        raw.alias("raw_record"),
         F.col("_source_file").alias("source_file"),
     )
     if quarantine_path:
         bad.write.mode("append").parquet(quarantine_path)
-    return good, bad
+    return _attach_staging(good, (df,)), bad

@@ -15,16 +15,25 @@ job, updated append-only with last-write-wins resolution (max over
 appends), so concurrent writers can't lose advances. At cluster scale
 this table stays tiny (one row per table/key), always broadcast in
 joins against fact data.
+
+A ``set_table_watermark`` appends its rows as literal columns
+(``sinks/logs.py::literal_rows``) in one write: no Python worker, the
+cost of a one-row file. Whether the table exists yet is asked of the
+Hadoop FileSystem of its path (``sinks/partitioned.py::_hadoop_fs``),
+so a store at a ``file://``, ``hdfs://`` or ``s3a://`` URI reads back
+what it wrote, like one at a bare local path.
 """
 
 from __future__ import annotations
 
-import os
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from pipelines_spark.sinks.logs import literal_rows
+from pipelines_spark.sinks.partitioned import _hadoop_fs
 
 STATE_SCHEMA = T.StructType(
     [
@@ -47,8 +56,9 @@ class WatermarkStore:
         self.path = path
 
     def _read(self) -> DataFrame:
-        if not os.path.exists(self.path):
-            return self.spark.createDataFrame([], STATE_SCHEMA)
+        fs, hpath = _hadoop_fs(self.spark, self.path)
+        if not fs.exists(hpath):
+            return literal_rows(self.spark, STATE_SCHEMA, [])
         return self.spark.read.schema(STATE_SCHEMA).parquet(self.path)
 
     def current(self, scope: str) -> DataFrame:
@@ -157,7 +167,5 @@ class WatermarkStore:
         # UTC wall clock, tz stripped: the audit column is NTZ by
         # convention and utcnow() is deprecated
         now = datetime.now(timezone.utc).replace(tzinfo=None)
-        df = self.spark.createDataFrame(
-            [(*r, now) for r in rows], STATE_SCHEMA
-        )
-        df.coalesce(1).write.mode("append").parquet(self.path)
+        out = literal_rows(self.spark, STATE_SCHEMA, [(*r, now) for r in rows])
+        out.write.mode("append").parquet(self.path)
