@@ -36,7 +36,7 @@ from pipelines_spark.llm.dedup import release_staging
 from pipelines_spark.naming import normalize_columns
 from pipelines_spark.operators.spine import find_gaps, time_spine
 from pipelines_spark.plans.models import ModelRunner
-from pipelines_spark.sinks.logs import append_capture_log
+from pipelines_spark.sinks.logs import append_capture_log, read_log
 from pipelines_spark.sinks.partitioned import (
     create_staging_table,
     to_all_string,
@@ -274,7 +274,9 @@ def recapture_missing(
     spine = time_spine(spark, spine_start, spine_end, interval=interval)
     gaps = [
         r["timestamp_captura"]
-        for r in find_gaps(spine, spark.read.parquet(logs_path), cap=cap).collect()
+        for r in find_gaps(
+            spine, read_log(spark, logs_path, spine_start, spine_end), cap=cap
+        ).collect()
     ]
     seconds = {"1 minute": 60, "5 minutes": 300, "1 hour": 3600}.get(interval, 60)
     for ts in gaps:

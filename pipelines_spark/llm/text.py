@@ -87,12 +87,6 @@ def language_id(text: Column | str) -> Column:
     return F.when(best["score"] > 0, best["lang"]).otherwise(F.lit("und"))
 
 
-def punct_ratio(text: Column | str) -> Column:
-    t = F.col(text) if isinstance(text, str) else text
-    n_punct = F.length(F.regexp_replace(t, "[A-Za-z0-9\\s]", ""))
-    return n_punct / F.greatest(F.length(t), F.lit(1)).cast("double")
-
-
 def _total_token_chars(text: Column | str) -> Column:
     """Σ length(token) over ``split(t, ' ')`` — closed form: every
     non-space character belongs to exactly one token (empty tokens

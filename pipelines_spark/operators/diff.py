@@ -76,8 +76,3 @@ def table_diff(
         .filter(F.col("diff_type").isNotNull())
         .select(*keys, "diff_type")
     )
-
-
-def diff_summary(diff: DataFrame) -> DataFrame:
-    """Counts per diff_type — the one-line reconciliation report."""
-    return diff.groupBy("diff_type").agg(F.count(F.lit(1)).alias("n_keys"))

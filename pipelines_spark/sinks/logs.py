@@ -19,6 +19,9 @@ the ``data`` partition. Its producers:
 
 One schema for every producer means a plain (non-mergeSchema) read
 sees every column regardless of which file's footer Spark samples.
+``read_log`` reads the table back with that schema, pruned to a range
+of days, so the recapture spine scans only its own days' files
+(partition discovery still lists every ``data=`` directory).
 
 Bookkeeping rows built on the driver (this table's batch rows, the
 watermark store's rows) go through ``literal_rows``: typed literal
@@ -45,7 +48,7 @@ from __future__ import annotations
 
 from datetime import datetime
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -61,6 +64,12 @@ LOG_SCHEMA = T.StructType(
 )
 
 
+def _log_day(ts: Column) -> Column:
+    """The ``data`` partition of a capture timestamp, in the session
+    time zone."""
+    return F.date_format(ts, "yyyy-MM-dd")
+
+
 def write_log_rows(rows: DataFrame, path: str) -> None:
     """Append ``rows`` (the ``LOG_SCHEMA`` columns, by name) to the log
     table at ``path``, partitioned by the ``data`` of their
@@ -73,12 +82,24 @@ def write_log_rows(rows: DataFrame, path: str) -> None:
     of a 0.2 s one-row append on ``local[4]``)."""
     (
         rows.select(*(F.col(f.name).cast(f.dataType) for f in LOG_SCHEMA))
-        .withColumn("data", F.date_format("timestamp_captura", "yyyy-MM-dd"))
+        .withColumn("data", _log_day(F.col("timestamp_captura")))
         .repartition(1)
         .write.mode("append")
         .partitionBy("data")
         .parquet(path)
     )
+
+
+def read_log(spark: SparkSession, path: str, start, end) -> DataFrame:
+    """The log table at ``path`` with its ``data`` column, read with
+    ``LOG_SCHEMA`` (no schema-inference job) and pruned to the
+    partitions of the days from ``start`` to ``end``: capture
+    timestamps or their strings, each mapped to its day by the
+    expression that partitions the rows, so the session time zone
+    agrees."""
+    first, last = (_log_day(F.lit(v).cast("timestamp")) for v in (start, end))
+    schema = T.StructType([*LOG_SCHEMA.fields, T.StructField("data", T.StringType())])
+    return spark.read.schema(schema).parquet(path).filter(F.col("data").between(first, last))
 
 
 def literal_rows(

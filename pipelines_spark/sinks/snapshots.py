@@ -13,20 +13,31 @@ re-lists millions of files. The fix is the same one Delta/Iceberg
 made standard, reduced to its core:
 
 - data files are immutable; a write job lands files under a unique
-  ``data/…`` subdirectory, invisible to readers;
+  ``data/w-<id>`` subdirectory (``_stage``), invisible to readers;
 - a table VERSION is a manifest (JSON in ``_log/``) listing the exact
   files of that snapshot — readers never list directories, they read
   the manifest (O(1) listing at any file count) and hand Spark the
   explicit file list;
-- commit = one atomic rename of the manifest into place. Rename
-  fails if the destination exists, which doubles as optimistic
-  concurrency control: two racing committers produce one winner and
-  one clean ``CommitConflict`` (retry re-reads the log). Readers see
-  the old complete snapshot or the new complete snapshot, never a
-  mix;
+- every version is one rename of a COMPLETE manifest into place
+  (``_commit``, the only code that creates a ``_log/v*.json``). The
+  operation, per-file stats and Bloom filters are computed from the
+  staged files before the rename, and a committed manifest is never
+  rewritten, so a crash leaves the previous version or the new
+  complete one. ``tests/test_snapshots.py::
+  test_one_commit_path_no_manifest_written_in_place`` fails for any
+  writer that writes a manifest in place;
+- rename fails if the destination exists, which doubles as optimistic
+  concurrency control. Readers see the old complete snapshot or the
+  new complete snapshot, never a mix. Two commit rules:
+  - a BLIND write (append, overwrite, ``publish_snapshot``) re-bases
+    on the new head and retries up to ``max_retries`` times;
+  - a REWRITE of a version it read (``snapshot_merge``,
+    ``compact_snapshot``, ``snapshot_delete_where``,
+    ``compact_small_files``) commits with that version as its parent
+    or raises ``CommitConflict``, so a racing commit is never dropped;
 - time travel = read an older manifest; incremental consumption =
-  union of files ADDED by manifests in ``(since, to]`` — the
-  streaming-ish "what changed" read without a streaming source;
+  the files ``change_files`` picks from manifests in ``(since, to]`` —
+  the streaming-ish "what changed" read without a streaming source;
 - ``expire_snapshots`` drops old manifests and deletes data files no
   retained snapshot references (storage reclaim with a bounded
   time-travel window).
@@ -47,13 +58,49 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-_LOG_DIR = "_log"
+LOG_DIR = "_log"
 _DATA_DIR = "data"
+
+#: operations whose 'added' files rewrite rows the table already held
+#: (a compaction changes no rows; a delete removes some, which an
+#: append-only consumer cannot retract): change consumers skip them
+_REWRITES = ("compact", "delete")
+#: operations that never drop or replace a row: over a run of them the
+#: change feed is exactly what the table gained, so an incremental
+#: fold (state/rollup.py) may consume it
+APPEND_ONLY = ("append", "compact")
 
 
 class CommitConflict(RuntimeError):
     """Another writer committed this version first; re-read the log
     and retry."""
+
+
+def manifest_name(version: int) -> str:
+    return f"v{version:08d}.json"
+
+
+def manifest_versions(names) -> list[int]:
+    """Sorted versions of the committed manifests among the file
+    ``names`` of a log directory (temp and staged manifests start with
+    ``_`` and are skipped)."""
+    out = []
+    for name in names:
+        if name.startswith("v") and name.endswith(".json"):
+            try:
+                out.append(int(name[1:-5]))
+            except ValueError:
+                continue
+    return sorted(out)
+
+
+def change_files(manifests: list[dict]) -> list[str]:
+    """The files a change consumer reads for ``manifests`` (oldest
+    first): every commit's 'added' files, except those of file-level
+    rewrites (compact, delete), whose replay would duplicate rows the
+    consumer already has. An overwrite contributes its full new file
+    set, matching overwrite-as-reload semantics."""
+    return [f for m in manifests if m["operation"] not in _REWRITES for f in m["added"]]
 
 
 def _fs(spark: SparkSession, path: str):
@@ -86,61 +133,206 @@ def _read_text(fs, jvm, path: str) -> str:
         stream.close()
 
 
-def _manifest_name(version: int) -> str:
-    return f"v{version:08d}.json"
-
-
 def _list_versions(fs, jvm, log_dir: str) -> list[int]:
     if not fs.exists(_hp(jvm, log_dir)):
         return []
-    versions = []
-    for status in fs.listStatus(_hp(jvm, log_dir)):
-        name = status.getPath().getName()
-        if name.startswith("v") and name.endswith(".json"):
-            try:
-                versions.append(int(name[1:-5]))
-            except ValueError:
-                continue
-    return sorted(versions)
+    return manifest_versions(s.getPath().getName() for s in fs.listStatus(_hp(jvm, log_dir)))
 
 
 def _load_manifest(fs, jvm, log_dir: str, version: int) -> dict:
-    return json.loads(_read_text(fs, jvm, f"{log_dir}/{_manifest_name(version)}"))
+    return json.loads(_read_text(fs, jvm, f"{log_dir}/{manifest_name(version)}"))
 
 
-def _data_files(fs, jvm, directory: str) -> list[str]:
-    """Relative paths (from the table root) of the parquet files a
-    write job produced under ``directory``."""
+def _data_files(fs, jvm, path: str, directory: str) -> list[str]:
+    """Paths, relative to the table root ``path``, of the parquet files
+    under ``directory``."""
+    root = _hp(jvm, path).toUri().getPath().rstrip("/") + "/"
     out = []
     it = fs.listFiles(_hp(jvm, directory), True)
     while it.hasNext():
-        status = it.next()
-        p = status.getPath().toUri().getPath()
+        p = it.next().getPath().toUri().getPath()
         if p.endswith(".parquet"):
-            out.append(p)
+            out.append(p[len(root):] if p.startswith(root) else p)
     return sorted(out)
+
+
+def _read_files(spark: SparkSession, path: str, schema_json: str, files: list[str]) -> DataFrame:
+    """The table files ``files`` read with the manifest schema."""
+    schema = StructType.fromJson(json.loads(schema_json))
+    if not files:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(*[f"{path}/{f}" for f in files])
 
 
 def current_version(spark: SparkSession, path: str) -> int | None:
     """Latest committed version, or None for a non-existent table."""
     fs, jvm = _fs(spark, path)
-    versions = _list_versions(fs, jvm, f"{path}/{_LOG_DIR}")
+    versions = _list_versions(fs, jvm, f"{path}/{LOG_DIR}")
     return versions[-1] if versions else None
 
 
-def _latest_txn_batch(fs, jvm, log_dir: str, versions: list[int], app_id: str):
-    """Highest batch id any retained manifest committed for
-    ``app_id`` (None if the app never committed). Chain walk — O(log
-    length); a production table format folds this into the latest
-    manifest, but the walk stays correct across interleaved merge/
-    compact/delete commits without threading txn state through every
-    commit path."""
-    best = None
+def _txn_done(fs, jvm, log_dir: str, versions: list[int], txn: tuple[str, int]) -> bool:
+    """Whether a retained manifest committed batch ``txn[1]`` or a
+    later one for app ``txn[0]``. Chain walk — O(log length); a
+    production table format folds this into the latest manifest, but
+    the walk stays correct across interleaved merge/compact/delete
+    commits without threading txn state through every commit path."""
+    app, batch = txn
     for v in versions:
         t = _load_manifest(fs, jvm, log_dir, v).get("txn")
-        if t and t.get("app") == app_id:
-            best = t["batch"] if best is None else max(best, t["batch"])
-    return best
+        if t and t.get("app") == app and t["batch"] >= batch:
+            return True
+    return False
+
+
+# ------------------------------------------------------------ the one commit
+
+def _stage(fs, jvm, path: str, df: DataFrame, write_id: str | None = None) -> list[str]:
+    """Write ``df`` into its own ``data/w-<id>`` directory, invisible
+    until a manifest lists it, and return its files relative to the
+    table root. The only writer of table data files."""
+    data_dir = f"{path}/{_DATA_DIR}/w-{write_id or uuid.uuid4().hex[:12]}"
+    df.write.mode("error").parquet(data_dir)
+    return _data_files(fs, jvm, path, data_dir)
+
+
+def _commit(fs, jvm, log_dir: str, manifest: dict) -> bool:
+    """Publish ``manifest`` as its version: write a temp file, then
+    rename it into place only if the version is absent. Returns False,
+    with the temp file removed, when another writer holds the version.
+    The only code that creates a ``_log/v*.json``."""
+    tmp = f"{log_dir}/_tmp-{uuid.uuid4().hex}.json"
+    _write_text(fs, jvm, tmp, json.dumps(manifest))
+    if fs.rename(_hp(jvm, tmp), _hp(jvm, f"{log_dir}/{manifest_name(manifest['version'])}")):
+        return True
+    fs.delete(_hp(jvm, tmp), False)
+    return False
+
+
+def _commit_blind(
+    fs, jvm, path: str, entry: dict, *, clock, max_retries: int,
+    txn: tuple[str, int] | None = None,
+) -> dict | None:
+    """Commit rule of a BLIND write: ``entry`` (operation append or
+    overwrite, schema, added files and extras) becomes the child of
+    whatever version is the head; a lost race re-bases on the new head
+    and retries, up to ``max_retries`` times. Returns the committed
+    manifest, or None when ``txn`` is already committed."""
+    log_dir = f"{path}/{LOG_DIR}"
+    for _attempt in range(max_retries):
+        versions = _list_versions(fs, jvm, log_dir)
+        if txn is not None and _txn_done(fs, jvm, log_dir, versions, txn):
+            # authoritative re-check under the current log head: the
+            # loser of a same-batch race lands here after its rename
+            # fails and must NOT commit a duplicate
+            return None
+        prev = versions[-1] if versions else None
+        base = []
+        if entry["operation"] == "append" and prev is not None:
+            prev_m = _load_manifest(fs, jvm, log_dir, prev)
+            base = prev_m["files"]
+            # additive evolution only: new columns may appear, but a
+            # column the table already has must keep its name AND
+            # type — a silently dropped or retyped column would make
+            # the latest schema misread every older file
+            prev_schema = StructType.fromJson(json.loads(prev_m["schema"]))
+            new_fields = {
+                f.name: f.dataType
+                for f in StructType.fromJson(json.loads(entry["schema"])).fields
+            }
+            bad = [
+                f"{f.name} ({f.dataType.simpleString()} -> "
+                f"{new_fields[f.name].simpleString() if f.name in new_fields else 'MISSING'})"
+                for f in prev_schema.fields
+                if f.name not in new_fields or new_fields[f.name] != f.dataType
+            ]
+            if bad:
+                raise ValueError(
+                    f"append schema incompatible with table {path}: "
+                    f"{', '.join(bad)}; only additive column changes are "
+                    "allowed on append (use mode='overwrite' to redefine)"
+                )
+        version = (prev or 0) + 1
+        manifest = {
+            "version": version,
+            "parent": prev,
+            "committed_at": float(clock()),
+            **entry,
+            "files": base + entry["added"],
+        }
+        if txn is not None:
+            manifest["txn"] = {"app": txn[0], "batch": txn[1]}
+        if _commit(fs, jvm, log_dir, manifest):
+            return manifest
+    raise CommitConflict(
+        f"lost the commit race {max_retries} times at {path} "
+        f"(last attempted version {version})"
+    )
+
+
+def _write(
+    spark: SparkSession,
+    path: str,
+    df: DataFrame,
+    operation: str,
+    *,
+    clock=time.time,
+    read: dict | None = None,
+    kept: tuple[str, ...] | list[str] = (),
+    stat_cols: list[str] | None = None,
+    bloom_cols: list[str] | None = None,
+    fpp: float = 0.01,
+    max_retries: int = 3,
+    txn: tuple[str, int] | None = None,
+    app: dict | None = None,
+) -> dict | None:
+    """Stage ``df``, complete its manifest from the staged files —
+    ``operation``, per-file ``stat_cols`` min/max and ``bloom_cols``
+    filters when given, ``app`` metadata — and commit it. Blind
+    (``_commit_blind``) when ``read`` is None; else the rewrite of the
+    manifest ``read``: ``kept`` (files of ``read``) carry over, and the
+    commit lands on ``read``'s version or raises ``CommitConflict``.
+    Returns the committed manifest (None for a replayed ``txn``)."""
+    if read is None and operation not in ("append", "overwrite"):
+        raise ValueError(f"mode must be append|overwrite, got {operation!r}")
+    fs, jvm = _fs(spark, path)
+    log_dir = f"{path}/{LOG_DIR}"
+    if read is None:
+        fs.mkdirs(_hp(jvm, log_dir))
+        # cheap pre-check BEFORE the write job: a replayed batch skips
+        # the data write entirely, not just the commit
+        if txn is not None and _txn_done(fs, jvm, log_dir, _list_versions(fs, jvm, log_dir), txn):
+            return None
+    added = _stage(fs, jvm, path, df)
+    entry = {
+        "operation": operation,
+        # a rewrite that carries rows over keeps the table's schema (the
+        # read back loosens nullability); an overwrite redefines it
+        "schema": df.schema.json() if read is None or operation == "overwrite" else read["schema"],
+        "added": added,
+    }
+    if stat_cols is not None:
+        entry["stats"] = _collect_file_stats(path, added, stat_cols)
+    if bloom_cols is not None:
+        entry["blooms"] = _collect_blooms(path, added, bloom_cols, fpp)
+    if app is not None:
+        entry["app"] = app
+    if read is None:
+        return _commit_blind(fs, jvm, path, entry, clock=clock, max_retries=max_retries, txn=txn)
+    manifest = {
+        "version": read["version"] + 1,
+        "parent": read["version"],
+        "committed_at": float(clock()),
+        **entry,
+        "files": [*kept, *added],
+    }
+    if not _commit(fs, jvm, log_dir, manifest):
+        raise CommitConflict(
+            f"version {manifest['version']} committed concurrently at {path}; "
+            f"re-run the {operation} against the new head (the version it "
+            "read is stale)"
+        )
+    return manifest
 
 
 def snapshot_write(
@@ -181,107 +373,32 @@ def snapshot_write(
     SURVEY "non-determinism in the reference") so time-travel tests
     replay exactly.
     """
-    if mode not in ("append", "overwrite"):
-        raise ValueError(f"mode must be append|overwrite, got {mode!r}")
-    fs, jvm = _fs(spark, path)
-    log_dir = f"{path}/{_LOG_DIR}"
-    fs.mkdirs(_hp(jvm, log_dir))
-
-    if txn is not None:
-        # cheap pre-check BEFORE the write job: a replayed batch skips
-        # the data write entirely, not just the commit
-        done = _latest_txn_batch(
-            fs, jvm, log_dir, _list_versions(fs, jvm, log_dir), txn[0]
-        )
-        if done is not None and txn[1] <= done:
-            return None
-
-    write_id = uuid.uuid4().hex[:12]
-    data_dir = f"{path}/{_DATA_DIR}/w-{write_id}"
-    df.write.mode("error").parquet(data_dir)
-    root_prefix = _hp(jvm, path).toUri().getPath().rstrip("/") + "/"
-    added = [
-        p[len(root_prefix):] if p.startswith(root_prefix) else p
-        for p in _data_files(fs, jvm, data_dir)
-    ]
-
-    for _attempt in range(max_retries):
-        versions = _list_versions(fs, jvm, log_dir)
-        if txn is not None:
-            # authoritative re-check under the current log head: the
-            # loser of a same-batch race lands here after its rename
-            # fails and must NOT commit a duplicate
-            done = _latest_txn_batch(fs, jvm, log_dir, versions, txn[0])
-            if done is not None and txn[1] <= done:
-                return None
-        prev = versions[-1] if versions else None
-        if mode == "append" and prev is not None:
-            prev_m = _load_manifest(fs, jvm, log_dir, prev)
-            base = prev_m["files"]
-            # additive evolution only: new columns may appear, but a
-            # column the table already has must keep its name AND
-            # type — a silently dropped or retyped column would make
-            # the latest schema misread every older file
-            prev_schema = StructType.fromJson(json.loads(prev_m["schema"]))
-            new_fields = {f.name: f.dataType for f in df.schema.fields}
-            bad = [
-                f"{f.name} ({f.dataType.simpleString()} -> "
-                f"{new_fields[f.name].simpleString() if f.name in new_fields else 'MISSING'})"
-                for f in prev_schema.fields
-                if f.name not in new_fields or new_fields[f.name] != f.dataType
-            ]
-            if bad:
-                raise ValueError(
-                    f"append schema incompatible with table {path}: "
-                    f"{', '.join(bad)}; only additive column changes are "
-                    "allowed on append (use mode='overwrite' to redefine)"
-                )
-        else:
-            base = []
-        version = (prev or 0) + 1
-        manifest = {
-            "version": version,
-            "parent": prev,
-            "operation": mode,
-            "committed_at": float(clock()),
-            "schema": df.schema.json(),
-            "added": added,
-            "files": base + added,
-        }
-        if txn is not None:
-            manifest["txn"] = {"app": txn[0], "batch": txn[1]}
-        tmp = f"{log_dir}/_tmp-{uuid.uuid4().hex}.json"
-        _write_text(fs, jvm, tmp, json.dumps(manifest))
-        # rename-if-absent IS the commit: exactly one of two racing
-        # writers wins the destination name
-        if fs.rename(_hp(jvm, tmp), _hp(jvm, f"{log_dir}/{_manifest_name(version)}")):
-            return version
-        fs.delete(_hp(jvm, tmp), False)
-    raise CommitConflict(
-        f"lost the commit race {max_retries} times at {path} "
-        f"(last attempted version {version})"
-    )
+    m = _write(spark, path, df, mode, clock=clock, max_retries=max_retries, txn=txn)
+    return None if m is None else m["version"]
 
 
-def _resolve_version(
-    fs, jvm, log_dir: str, version: int | None, as_of: float | None
-) -> int:
+def _resolve(
+    fs, jvm, log_dir: str, version: int | None = None, as_of: float | None = None
+) -> dict:
+    """Manifest of ``version``, of the newest commit at-or-before
+    ``as_of``, or of the head."""
     versions = _list_versions(fs, jvm, log_dir)
     if not versions:
         raise FileNotFoundError(f"no snapshot log at {log_dir}")
     if version is not None:
         if version not in versions:
             raise ValueError(f"version {version} not in log (have {versions})")
-        return version
-    if as_of is not None:
+    elif as_of is not None:
         eligible = [
             v for v in versions
             if _load_manifest(fs, jvm, log_dir, v)["committed_at"] <= as_of
         ]
         if not eligible:
             raise ValueError(f"no snapshot committed at or before {as_of}")
-        return eligible[-1]
-    return versions[-1]
+        version = eligible[-1]
+    else:
+        version = versions[-1]
+    return _load_manifest(fs, jvm, log_dir, version)
 
 
 def snapshot_read(
@@ -296,14 +413,8 @@ def snapshot_read(
     (unix seconds). The scan gets the manifest's explicit file list —
     no directory listing, no chance of seeing uncommitted files."""
     fs, jvm = _fs(spark, path)
-    log_dir = f"{path}/{_LOG_DIR}"
-    v = _resolve_version(fs, jvm, log_dir, version, as_of)
-    manifest = _load_manifest(fs, jvm, log_dir, v)
-    schema = StructType.fromJson(json.loads(manifest["schema"]))
-    files = [f"{path}/{f}" for f in manifest["files"]]
-    if not files:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*files)
+    manifest = _resolve(fs, jvm, f"{path}/{LOG_DIR}", version, as_of)
+    return _read_files(spark, path, manifest["schema"], manifest["files"])
 
 
 def snapshot_changes(
@@ -315,41 +426,27 @@ def snapshot_changes(
 ) -> DataFrame:
     """Rows ADDED by commits in ``(since_version, to_version]`` — the
     incremental-consumption read (SURVEY T2's "start where the last
-    materialization ended" as a table-level primitive). An overwrite
-    commit contributes its full new file set, matching
-    overwrite-as-reload semantics."""
+    materialization ended" as a table-level primitive). The files are
+    the ones ``change_files`` picks: an overwrite commit contributes
+    its full new file set, and compact/delete commits nothing."""
     fs, jvm = _fs(spark, path)
-    log_dir = f"{path}/{_LOG_DIR}"
+    log_dir = f"{path}/{LOG_DIR}"
     versions = _list_versions(fs, jvm, log_dir)
     if to_version is None:
         to_version = versions[-1] if versions else since_version
-    files: list[str] = []
-    schema_json = None
-    for v in versions:
-        if since_version < v <= to_version:
-            m = _load_manifest(fs, jvm, log_dir, v)
-            schema_json = m["schema"]
-            if m["operation"] in ("compact", "delete"):
-                # file-level rewrites (no new rows) — replaying their
-                # 'added' files would duplicate surviving rows
-                # downstream; deletes additionally need retraction
-                # semantics no append-only consumer has
-                continue
-            files.extend(m["added"])
-    if schema_json is None:
-        latest = snapshot_read(spark, path)
-        return spark.createDataFrame([], latest.schema)
-    schema = StructType.fromJson(json.loads(schema_json))
-    if not files:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*[f"{path}/{f}" for f in files])
+    manifests = [
+        _load_manifest(fs, jvm, log_dir, v) for v in versions if since_version < v <= to_version
+    ]
+    if not manifests:
+        return spark.createDataFrame([], snapshot_read(spark, path).schema)
+    return _read_files(spark, path, manifests[-1]["schema"], change_files(manifests))
 
 
 def snapshot_history(spark: SparkSession, path: str) -> list[dict]:
     """Commit log, oldest first: version, parent, operation,
     committed_at, n_files, n_added."""
     fs, jvm = _fs(spark, path)
-    log_dir = f"{path}/{_LOG_DIR}"
+    log_dir = f"{path}/{LOG_DIR}"
     out = []
     for v in _list_versions(fs, jvm, log_dir):
         m = _load_manifest(fs, jvm, log_dir, v)
@@ -377,7 +474,7 @@ def expire_snapshots(
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     fs, jvm = _fs(spark, path)
-    log_dir = f"{path}/{_LOG_DIR}"
+    log_dir = f"{path}/{LOG_DIR}"
     versions = _list_versions(fs, jvm, log_dir)
     retained = versions[-keep_last:]
     live: set[str] = set()
@@ -387,9 +484,7 @@ def expire_snapshots(
     removed_files = 0
     data_root = f"{path}/{_DATA_DIR}"
     if fs.exists(_hp(jvm, data_root)):
-        root_prefix = _hp(jvm, path).toUri().getPath().rstrip("/") + "/"
-        for abs_path in _data_files(fs, jvm, data_root):
-            rel = abs_path[len(root_prefix):] if abs_path.startswith(root_prefix) else abs_path
+        for rel in _data_files(fs, jvm, path, data_root):
             if rel not in live:
                 fs.delete(_hp(jvm, f"{path}/{rel}"), False)
                 removed_files += 1
@@ -404,7 +499,7 @@ def expire_snapshots(
     removed_manifests = 0
     for v in versions:
         if v not in retained:
-            fs.delete(_hp(jvm, f"{log_dir}/{_manifest_name(v)}"), False)
+            fs.delete(_hp(jvm, f"{log_dir}/{manifest_name(v)}"), False)
             removed_manifests += 1
     return {"manifests_removed": removed_manifests, "data_files_removed": removed_files}
 
@@ -415,15 +510,25 @@ def expire_snapshots(
 _STAT_TYPES = ("int", "bigint", "long", "double", "float", "date", "timestamp", "string", "smallint", "tinyint", "decimal")
 
 
-def _collect_file_stats(files: list[str], stat_cols: list[str]) -> dict:
-    """Per-file min/max for ``stat_cols`` from parquet footers — the
-    write job already computed these; reading footers is O(files),
-    zero data scanned."""
+def _stat_cols(schema: StructType, stat_cols: list[str] | None) -> list[str]:
+    """``stat_cols``, defaulting to every orderable primitive column."""
+    if stat_cols is not None:
+        return stat_cols
+    return [
+        f.name for f in schema.fields
+        if f.dataType.simpleString().split("(")[0] in _STAT_TYPES
+    ]
+
+
+def _collect_file_stats(path: str, files: list[str], stat_cols: list[str]) -> dict:
+    """Per-file min/max for ``stat_cols`` from the parquet footers of
+    the table ``files`` — the write job already computed these;
+    reading footers is O(files), zero data scanned."""
     import pyarrow.parquet as pq
 
     stats: dict[str, dict] = {}
-    for f in files:
-        md = pq.ParquetFile(f).metadata
+    for rel in files:
+        md = pq.ParquetFile(f"{path}/{rel}").metadata
         names = md.schema.names
         per_col = {}
         for c in stat_cols:
@@ -441,7 +546,7 @@ def _collect_file_stats(files: list[str], stat_cols: list[str]) -> dict:
                 hi = st.max if hi is None else max(hi, st.max)
             if ok and lo is not None:
                 per_col[c] = [_json_safe(lo), _json_safe(hi)]
-        stats[f] = per_col
+        stats[rel] = per_col
     return stats
 
 
@@ -453,6 +558,20 @@ def _json_safe(v):
     if isinstance(v, bytes):
         return v.decode("utf-8", "replace")
     return v
+
+
+def _file_meta(fs, jvm, log_dir: str, version: int) -> tuple[dict, dict]:
+    """Per-file min/max stats and Bloom filters of the files in
+    ``version``. Each lives on the manifest that ADDED its file, so
+    walk the chain."""
+    stats: dict[str, dict] = {}
+    blooms: dict[str, dict] = {}
+    for ver in _list_versions(fs, jvm, log_dir):
+        if ver <= version:
+            m = _load_manifest(fs, jvm, log_dir, ver)
+            stats.update(m.get("stats", {}))
+            blooms.update(m.get("blooms", {}))
+    return stats, blooms
 
 
 def snapshot_write_with_stats(
@@ -473,31 +592,15 @@ def snapshot_write_with_stats(
     planner a million paths and let footer-skipping sort it out' is
     driver memory and planning time, not just I/O.
 
-    Stats default to every orderable primitive column. Local-scheme
-    stats collection uses pyarrow on the committed files; the write
-    path is otherwise identical to ``snapshot_write``.
+    Stats default to every orderable primitive column. They are read
+    with pyarrow from the footers of the staged (local-scheme) files
+    and are part of the manifest the one commit renames into place: a
+    committed version never lacks its stats.
     """
-    if stat_cols is None:
-        stat_cols = [
-            f.name
-            for f in df.schema.fields
-            if f.dataType.simpleString().split("(")[0] in _STAT_TYPES
-        ]
-    version = snapshot_write(
-        spark, path, df, mode=mode, clock=clock, max_retries=max_retries
-    )
-    # enrich the just-committed manifest (idempotent same-file rewrite
-    # AFTER the rename won: the version is already durable)
-    fs, jvm = _fs(spark, path)
-    log_dir = f"{path}/{_LOG_DIR}"
-    manifest = _load_manifest(fs, jvm, log_dir, version)
-    abs_added = [f"{path}/{rel}" for rel in manifest["added"]]
-    file_stats = _collect_file_stats(abs_added, stat_cols)
-    manifest["stats"] = {
-        rel: file_stats.get(f"{path}/{rel}", {}) for rel in manifest["added"]
-    }
-    _write_text(fs, jvm, f"{log_dir}/{_manifest_name(version)}", json.dumps(manifest))
-    return version
+    return _write(
+        spark, path, df, mode, clock=clock, max_retries=max_retries,
+        stat_cols=_stat_cols(df.schema, stat_cols),
+    )["version"]
 
 
 def snapshot_read_pruned(
@@ -516,16 +619,9 @@ def snapshot_read_pruned(
     from pyspark.sql import functions as F
 
     fs, jvm = _fs(spark, path)
-    log_dir = f"{path}/{_LOG_DIR}"
-    v = _resolve_version(fs, jvm, log_dir, version, None)
-    # stats live on the manifest that ADDED each file; walk the chain
-    stats: dict[str, list] = {}
-    for ver in _list_versions(fs, jvm, log_dir):
-        if ver <= v:
-            m = _load_manifest(fs, jvm, log_dir, ver)
-            stats.update(m.get("stats", {}))
-    manifest = _load_manifest(fs, jvm, log_dir, v)
-    schema = StructType.fromJson(json.loads(manifest["schema"]))
+    log_dir = f"{path}/{LOG_DIR}"
+    manifest = _resolve(fs, jvm, log_dir, version)
+    stats, _blooms = _file_meta(fs, jvm, log_dir, manifest["version"])
 
     def keep(rel: str) -> bool:
         rng = stats.get(rel, {}).get(col)
@@ -538,10 +634,7 @@ def snapshot_read_pruned(
             return False
         return True
 
-    files = [f"{path}/{rel}" for rel in manifest["files"] if keep(rel)]
-    if not files:
-        return spark.createDataFrame([], schema)
-    out = spark.read.schema(schema).parquet(*files)
+    out = _read_files(spark, path, manifest["schema"], [rel for rel in manifest["files"] if keep(rel)])
     if lo is not None:
         out = out.filter(F.col(col) >= F.lit(lo))
     if hi is not None:
@@ -566,13 +659,21 @@ def snapshot_merge(
     overwrite simply does not exist here.
 
     Copy-on-write at snapshot grain (the whole surviving file set is
-    rewritten). For huge tables where merges touch few rows, pair the
-    table with partition columns and use ``merge_upsert`` on a Hive
-    layout instead — or prune the rewrite set with manifest stats; the
-    contract here is correctness-first. Returns {"version",
+    rewritten, committed as an 'overwrite'). For huge tables where
+    merges touch few rows, pair the table with partition columns and
+    use ``merge_upsert`` on a Hive layout instead — or prune the
+    rewrite set with manifest stats; the contract here is
+    correctness-first.
+
+    The merge rewrites the version it read, so it commits on exactly
+    that version: if another writer commits in between, it raises
+    ``CommitConflict`` and the table keeps the racer's rows — re-run
+    the merge against the new head. Returns {"version",
     "rows_upserted"}.
     """
-    current = snapshot_read(spark, path)
+    fs, jvm = _fs(spark, path)
+    read = _resolve(fs, jvm, f"{path}/{LOG_DIR}")
+    current = _read_files(spark, path, read["schema"], read["files"])
     if set(current.columns) != set(updates.columns):
         raise ValueError(
             f"updates schema {sorted(updates.columns)} != table schema "
@@ -582,8 +683,8 @@ def snapshot_merge(
         updates.select(*keys).distinct(), keys, "left_anti"
     ).select(*updates.columns)
     merged = survivors.unionByName(updates)
-    version = snapshot_write(spark, path, merged, mode="overwrite", clock=clock)
-    return {"version": version, "rows_upserted": updates.count()}
+    m = _write(spark, path, merged, "overwrite", clock=clock, read=read)
+    return {"version": m["version"], "rows_upserted": updates.count()}
 
 
 def compact_snapshot(
@@ -598,46 +699,42 @@ def compact_snapshot(
     """Rewrite the current snapshot into ``target_files`` files and
     commit it with operation='compact' — a FILE-LEVEL rewrite that
     changes no rows. Change consumers must not replay it:
-    ``snapshot_changes`` and the snapshot_table stream SKIP compact
-    commits (their 'added' files are rewrites of already-delivered
-    rows), and incremental rollups treat them as empty deltas. Old
-    small files stay readable for time travel until
-    ``expire_snapshots``. Returns {"version", "files_before",
-    "files_after"}.
+    ``change_files`` (behind ``snapshot_changes`` and the
+    snapshot_table stream) SKIPS compact commits (their 'added' files
+    are rewrites of already-delivered rows), and incremental rollups
+    treat them as empty deltas. Old small files stay readable for time
+    travel until ``expire_snapshots``. Returns {"version",
+    "files_before", "files_after"}.
 
-    The rewrite re-collects manifest min/max stats (``stat_cols``,
-    default: every orderable primitive) so ``snapshot_read_pruned``
-    keeps working on the compacted file set — a compaction that
-    silently discarded stats would turn every pruned read into a full
-    scan. ``sort_cols`` additionally range-partitions + sorts the
-    rewrite (the OPTIMIZE-and-cluster move): each compacted file owns
-    a disjoint range of the sort key, so stat pruning on that key hits
-    single files. Per-file Bloom filters are NOT carried through a
-    compact (rebuild with ``snapshot_write_with_blooms`` if point
-    lookups matter post-compaction)."""
-    from pyspark.sql import functions as F  # noqa: F401 (column refs)
+    The operation and fresh manifest min/max stats (``stat_cols``,
+    default: every orderable primitive) are in the manifest the one
+    commit renames into place, so ``snapshot_read_pruned`` keeps
+    working on the compacted file set and no reader ever sees the
+    rewrite as an overwrite. ``sort_cols`` additionally
+    range-partitions + sorts the rewrite (the OPTIMIZE-and-cluster
+    move): each compacted file owns a disjoint range of the sort key,
+    so stat pruning on that key hits single files. Per-file Bloom
+    filters are NOT carried through a compact (rebuild with
+    ``snapshot_write_with_blooms`` if point lookups matter
+    post-compaction).
 
+    The compaction commits on exactly the version it read: a commit
+    that lands in between (an append, say) raises ``CommitConflict``
+    rather than being overwritten — re-run against the new head."""
     fs, jvm = _fs(spark, path)
-    log_dir = f"{path}/{_LOG_DIR}"
-    head = _resolve_version(fs, jvm, log_dir, None, None)
-    files_before = len(_load_manifest(fs, jvm, log_dir, head)["files"])
-    df = snapshot_read(spark, path, version=head)
+    read = _resolve(fs, jvm, f"{path}/{LOG_DIR}")
+    df = _read_files(spark, path, read["schema"], read["files"])
     if sort_cols:
         df = df.repartitionByRange(target_files, *sort_cols).sortWithinPartitions(
             *sort_cols
         )
     else:
         df = df.coalesce(target_files)
-    version = snapshot_write_with_stats(
-        spark, path, df, mode="overwrite", stat_cols=stat_cols, clock=clock
+    m = _write(
+        spark, path, df, "compact", clock=clock, read=read,
+        stat_cols=_stat_cols(df.schema, stat_cols),
     )
-    # stamp the true operation (the rename already won; same-file
-    # rewrite of the committed manifest is idempotent)
-    manifest = _load_manifest(fs, jvm, log_dir, version)
-    manifest["operation"] = "compact"
-    _write_text(fs, jvm, f"{log_dir}/{_manifest_name(version)}", json.dumps(manifest))
-    files_after = len(manifest["files"])
-    return {"version": version, "files_before": files_before, "files_after": files_after}
+    return {"version": m["version"], "files_before": len(read["files"]), "files_after": len(m["files"])}
 
 
 def snapshot_delete_where(
@@ -675,18 +772,10 @@ def snapshot_delete_where(
     Returns {"version", "rows_deleted", "files_rewritten",
     "files_kept"}.
     """
-    from pyspark.sql import functions as F  # noqa: F401 (predicate helpers)
-
     fs, jvm = _fs(spark, path)
-    log_dir = f"{path}/{_LOG_DIR}"
-    head = _resolve_version(fs, jvm, log_dir, None, None)
-    manifest = _load_manifest(fs, jvm, log_dir, head)
-    schema = StructType.fromJson(json.loads(manifest["schema"]))
-
-    stats: dict[str, dict] = {}
-    for ver in _list_versions(fs, jvm, log_dir):
-        if ver <= head:
-            stats.update(_load_manifest(fs, jvm, log_dir, ver).get("stats", {}))
+    log_dir = f"{path}/{LOG_DIR}"
+    read = _resolve(fs, jvm, log_dir)
+    stats = _file_meta(fs, jvm, log_dir, read["version"])[0] if prune_col is not None else {}
 
     def is_candidate(rel: str) -> bool:
         if prune_col is None:
@@ -701,61 +790,24 @@ def snapshot_delete_where(
             return False
         return True
 
-    candidates = [rel for rel in manifest["files"] if is_candidate(rel)]
-    kept = [rel for rel in manifest["files"] if rel not in set(candidates)]
+    candidates = [rel for rel in read["files"] if is_candidate(rel)]
+    kept = [rel for rel in read["files"] if rel not in set(candidates)]
 
     if not candidates:
         return {
-            "version": head, "rows_deleted": 0,
+            "version": read["version"], "rows_deleted": 0,
             "files_rewritten": 0, "files_kept": len(kept),
         }
 
-    cand_df = spark.read.schema(schema).parquet(
-        *[f"{path}/{rel}" for rel in candidates]
-    )
-    survivors = cand_df.filter(~predicate)
+    cand_df = _read_files(spark, path, read["schema"], candidates)
     n_before = cand_df.count()
-
-    write_id = uuid.uuid4().hex[:12]
-    data_dir = f"{path}/{_DATA_DIR}/w-{write_id}"
-    survivors.write.mode("error").parquet(data_dir)
-    root_prefix = _hp(jvm, path).toUri().getPath().rstrip("/") + "/"
-    added = [
-        p[len(root_prefix):] if p.startswith(root_prefix) else p
-        for p in _data_files(fs, jvm, data_dir)
-    ]
-    n_after = spark.read.schema(schema).parquet(
-        *[f"{path}/{rel}" for rel in added]
-    ).count() if added else 0
-
-    new_stats = {}
-    if prune_col is not None and added:
-        file_stats = _collect_file_stats(
-            [f"{path}/{rel}" for rel in added], [prune_col]
-        )
-        new_stats = {rel: file_stats.get(f"{path}/{rel}", {}) for rel in added}
-
-    version = head + 1
-    new_manifest = {
-        "version": version,
-        "parent": head,
-        "operation": "delete",
-        "committed_at": float(clock()),
-        "schema": manifest["schema"],
-        "added": added,
-        "files": kept + added,
-        "stats": new_stats,
-    }
-    tmp = f"{log_dir}/_tmp-{uuid.uuid4().hex}.json"
-    _write_text(fs, jvm, tmp, json.dumps(new_manifest))
-    if not fs.rename(_hp(jvm, tmp), _hp(jvm, f"{log_dir}/{_manifest_name(version)}")):
-        fs.delete(_hp(jvm, tmp), False)
-        raise CommitConflict(
-            f"version {version} committed concurrently at {path}; re-run "
-            "the delete against the new head (the carry-over base is stale)"
-        )
+    m = _write(
+        spark, path, cand_df.filter(~predicate), "delete", clock=clock, read=read,
+        kept=kept, stat_cols=None if prune_col is None else [prune_col],
+    )
+    n_after = _read_files(spark, path, m["schema"], m["added"]).count() if m["added"] else 0
     return {
-        "version": version,
+        "version": m["version"],
         "rows_deleted": n_before - n_after,
         "files_rewritten": len(candidates),
         "files_kept": len(kept),
@@ -781,17 +833,11 @@ def snapshot_write_staged(
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
     fs, jvm = _fs(spark, path)
-    log_dir = f"{path}/{_LOG_DIR}"
+    log_dir = f"{path}/{LOG_DIR}"
     fs.mkdirs(_hp(jvm, log_dir))
 
     write_id = uuid.uuid4().hex[:12]
-    data_dir = f"{path}/{_DATA_DIR}/w-{write_id}"
-    df.write.mode("error").parquet(data_dir)
-    root_prefix = _hp(jvm, path).toUri().getPath().rstrip("/") + "/"
-    added = [
-        p[len(root_prefix):] if p.startswith(root_prefix) else p
-        for p in _data_files(fs, jvm, data_dir)
-    ]
+    added = _stage(fs, jvm, path, df, write_id)
     staged = {
         "operation": mode,
         "staged_at": float(clock()),
@@ -807,18 +853,14 @@ def staged_snapshot_read(spark: SparkSession, path: str, stage_id: str) -> DataF
     the audit target. For mode='append' that is current ∪ staged
     files; for 'overwrite', the staged files alone."""
     fs, jvm = _fs(spark, path)
-    log_dir = f"{path}/{_LOG_DIR}"
+    log_dir = f"{path}/{LOG_DIR}"
     staged = json.loads(_read_text(fs, jvm, f"{log_dir}/_staged-{stage_id}.json"))
-    schema = StructType.fromJson(json.loads(staged["schema"]))
-    files = [f"{path}/{rel}" for rel in staged["added"]]
+    files = staged["added"]
     if staged["operation"] == "append":
         versions = _list_versions(fs, jvm, log_dir)
         if versions:
-            base = _load_manifest(fs, jvm, log_dir, versions[-1])["files"]
-            files = [f"{path}/{rel}" for rel in base] + files
-    if not files:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*files)
+            files = _load_manifest(fs, jvm, log_dir, versions[-1])["files"] + files
+    return _read_files(spark, path, staged["schema"], files)
 
 
 def publish_snapshot(
@@ -833,14 +875,13 @@ def publish_snapshot(
     """Audit-then-publish: run ``audit`` (a callable receiving the
     would-be table DataFrame, returning True to allow) against the
     staged snapshot, then promote the staged manifest to the next
-    version with the usual rename-if-absent commit. A failing audit
-    leaves the table untouched and the stage in place for triage
-    (``abandon_staged`` discards it). This is the Iceberg WAP pattern:
-    bad data is caught while INVISIBLE, never rolled back after
-    readers saw it."""
+    version with the usual blind commit (re-based on the head, retried
+    on a lost race). A failing audit leaves the table untouched and
+    the stage in place for triage (``abandon_staged`` discards it).
+    This is the Iceberg WAP pattern: bad data is caught while
+    INVISIBLE, never rolled back after readers saw it."""
     fs, jvm = _fs(spark, path)
-    log_dir = f"{path}/{_LOG_DIR}"
-    spath = f"{log_dir}/_staged-{stage_id}.json"
+    spath = f"{path}/{LOG_DIR}/_staged-{stage_id}.json"
     staged = json.loads(_read_text(fs, jvm, spath))
 
     if audit is not None and not audit(staged_snapshot_read(spark, path, stage_id)):
@@ -848,34 +889,10 @@ def publish_snapshot(
             f"audit rejected staged commit {stage_id} at {path}; table "
             "unchanged — fix or abandon_staged"
         )
-
-    for _attempt in range(max_retries):
-        versions = _list_versions(fs, jvm, log_dir)
-        prev = versions[-1] if versions else None
-        base = (
-            _load_manifest(fs, jvm, log_dir, prev)["files"]
-            if staged["operation"] == "append" and prev is not None
-            else []
-        )
-        version = (prev or 0) + 1
-        manifest = {
-            "version": version,
-            "parent": prev,
-            "operation": staged["operation"],
-            "committed_at": float(clock()),
-            "schema": staged["schema"],
-            "added": staged["added"],
-            "files": base + staged["added"],
-        }
-        tmp = f"{log_dir}/_tmp-{uuid.uuid4().hex}.json"
-        _write_text(fs, jvm, tmp, json.dumps(manifest))
-        if fs.rename(_hp(jvm, tmp), _hp(jvm, f"{log_dir}/{_manifest_name(version)}")):
-            fs.delete(_hp(jvm, spath), False)
-            return version
-        fs.delete(_hp(jvm, tmp), False)
-    raise CommitConflict(
-        f"lost the publish race {max_retries} times for stage {stage_id} at {path}"
-    )
+    entry = {k: staged[k] for k in ("operation", "schema", "added")}
+    m = _commit_blind(fs, jvm, path, entry, clock=clock, max_retries=max_retries)
+    fs.delete(_hp(jvm, spath), False)
+    return m["version"]
 
 
 def abandon_staged(spark: SparkSession, path: str, stage_id: str) -> None:
@@ -883,7 +900,7 @@ def abandon_staged(spark: SparkSession, path: str, stage_id: str) -> None:
     (Unpublished stages are also swept as orphans by
     ``expire_snapshots`` if never explicitly abandoned.)"""
     fs, jvm = _fs(spark, path)
-    spath = f"{path}/{_LOG_DIR}/_staged-{stage_id}.json"
+    spath = f"{path}/{LOG_DIR}/_staged-{stage_id}.json"
     staged = json.loads(_read_text(fs, jvm, spath))
     for rel in staged["added"]:
         fs.delete(_hp(jvm, f"{path}/{rel}"), False)
@@ -940,6 +957,22 @@ def _bloom_maybe_contains(bloom: dict, value) -> bool:
     return True
 
 
+def _collect_blooms(path: str, files: list[str], bloom_cols: list[str], fpp: float) -> dict:
+    """A Bloom filter per table file for each of ``bloom_cols``, built
+    from the file's own column pages (pyarrow, column-projected read —
+    no Spark job)."""
+    import pyarrow.parquet as pq
+
+    blooms: dict[str, dict] = {}
+    for rel in files:
+        tbl = pq.read_table(f"{path}/{rel}", columns=list(bloom_cols))
+        blooms[rel] = {
+            c: _bloom_build(tbl.column(c).to_pylist(), fpp)
+            for c in bloom_cols if c in tbl.column_names
+        }
+    return blooms
+
+
 def snapshot_write_with_blooms(
     spark: SparkSession,
     path: str,
@@ -964,31 +997,17 @@ def snapshot_write_with_blooms(
     filters fire instead of every file. ~1.2 KB per file per column at
     1% fpp for 1k distinct values; the manifest stays tiny.
 
-    Filters are built from the committed files' own column pages
-    (pyarrow, column-projected read — no Spark job). Values hash by
-    their canonical string form, so lookups must pass the same type
-    they wrote (int 5 and "5" collide by design: str(5)).
+    Filters are built from the staged files' own column pages
+    (pyarrow, column-projected read — no Spark job) and committed with
+    the stats in the one manifest rename: a committed version never
+    lacks its filters. Values hash by their canonical string form, so
+    lookups must pass the same type they wrote (int 5 and "5" collide
+    by design: str(5)).
     """
-    version = snapshot_write_with_stats(
-        spark, path, df, mode=mode, stat_cols=stat_cols, clock=clock,
-        max_retries=max_retries,
-    )
-    import pyarrow.parquet as pq
-
-    fs, jvm = _fs(spark, path)
-    log_dir = f"{path}/{_LOG_DIR}"
-    manifest = _load_manifest(fs, jvm, log_dir, version)
-    blooms: dict[str, dict] = {}
-    for rel in manifest["added"]:
-        tbl = pq.read_table(f"{path}/{rel}", columns=[c for c in bloom_cols])
-        per_col = {}
-        for c in bloom_cols:
-            if c in tbl.column_names:
-                per_col[c] = _bloom_build(tbl.column(c).to_pylist(), fpp)
-        blooms[rel] = per_col
-    manifest["blooms"] = blooms
-    _write_text(fs, jvm, f"{log_dir}/{_manifest_name(version)}", json.dumps(manifest))
-    return version
+    return _write(
+        spark, path, df, mode, clock=clock, max_retries=max_retries,
+        stat_cols=_stat_cols(df.schema, stat_cols), bloom_cols=bloom_cols, fpp=fpp,
+    )["version"]
 
 
 def snapshot_read_point(
@@ -1007,17 +1026,9 @@ def snapshot_read_point(
     from pyspark.sql import functions as F
 
     fs, jvm = _fs(spark, path)
-    log_dir = f"{path}/{_LOG_DIR}"
-    v = _resolve_version(fs, jvm, log_dir, version, None)
-    blooms: dict[str, dict] = {}
-    stats: dict[str, dict] = {}
-    for ver in _list_versions(fs, jvm, log_dir):
-        if ver <= v:
-            m = _load_manifest(fs, jvm, log_dir, ver)
-            blooms.update(m.get("blooms", {}))
-            stats.update(m.get("stats", {}))
-    manifest = _load_manifest(fs, jvm, log_dir, v)
-    schema = StructType.fromJson(json.loads(manifest["schema"]))
+    log_dir = f"{path}/{LOG_DIR}"
+    manifest = _resolve(fs, jvm, log_dir, version)
+    stats, blooms = _file_meta(fs, jvm, log_dir, manifest["version"])
 
     def keep(rel: str) -> bool:
         rng = stats.get(rel, {}).get(col)
@@ -1033,14 +1044,8 @@ def snapshot_read_point(
             return False
         return True
 
-    files = [f"{path}/{rel}" for rel in manifest["files"] if keep(rel)]
-    if not files:
-        return spark.createDataFrame([], schema)
-    return (
-        spark.read.schema(schema)
-        .parquet(*files)
-        .filter(F.col(col) == F.lit(value))
-    )
+    files = [rel for rel in manifest["files"] if keep(rel)]
+    return _read_files(spark, path, manifest["schema"], files).filter(F.col(col) == F.lit(value))
 
 
 def snapshot_foreach_batch(path: str, app_id: str, *, mode: str = "append"):
@@ -1059,13 +1064,13 @@ def snapshot_foreach_batch(path: str, app_id: str, *, mode: str = "append"):
     (same-filename replace, pipelines/utils/tasks.py:273-276) becomes
     a real transactional guarantee."""
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
+    def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
         snapshot_write(
             batch_df.sparkSession, path, batch_df,
             mode=mode, txn=(app_id, int(batch_id)),
         )
 
-    return _write
+    return _write_batch
 
 
 def compact_small_files(
@@ -1104,64 +1109,25 @@ def compact_small_files(
     version is the pre-existing head when nothing qualified.
     """
     fs, jvm = _fs(spark, path)
-    log_dir = f"{path}/{_LOG_DIR}"
-    head = _resolve_version(fs, jvm, log_dir, None, None)
-    manifest = _load_manifest(fs, jvm, log_dir, head)
-    schema = StructType.fromJson(json.loads(manifest["schema"]))
+    read = _resolve(fs, jvm, f"{path}/{LOG_DIR}")
 
     limit = int(small_file_mb * (1 << 20))
     candidates = [
         rel
-        for rel in manifest["files"]
+        for rel in read["files"]
         if fs.getFileStatus(_hp(jvm, f"{path}/{rel}")).getLen() < limit
     ]
-    kept = [rel for rel in manifest["files"] if rel not in set(candidates)]
+    kept = [rel for rel in read["files"] if rel not in set(candidates)]
     if len(candidates) < min_files_to_compact:
-        return {"version": head, "files_rewritten": 0, "files_kept": len(manifest["files"])}
+        return {"version": read["version"], "files_rewritten": 0, "files_kept": len(read["files"])}
 
-    small_df = spark.read.schema(schema).parquet(
-        *[f"{path}/{rel}" for rel in candidates]
-    ).coalesce(target_files)
-
-    write_id = uuid.uuid4().hex[:12]
-    data_dir = f"{path}/{_DATA_DIR}/w-{write_id}"
-    small_df.write.mode("error").parquet(data_dir)
-    root_prefix = _hp(jvm, path).toUri().getPath().rstrip("/") + "/"
-    added = [
-        p[len(root_prefix):] if p.startswith(root_prefix) else p
-        for p in _data_files(fs, jvm, data_dir)
-    ]
-
-    if stat_cols is None:
-        stat_cols = [
-            f.name
-            for f in schema.fields
-            if f.dataType.simpleString().split("(")[0] in _STAT_TYPES
-        ]
-    file_stats = _collect_file_stats([f"{path}/{rel}" for rel in added], stat_cols)
-    new_stats = {rel: file_stats.get(f"{path}/{rel}", {}) for rel in added}
-
-    version = head + 1
-    new_manifest = {
-        "version": version,
-        "parent": head,
-        "operation": "compact",
-        "committed_at": float(clock()),
-        "schema": manifest["schema"],
-        "added": added,
-        "files": kept + added,
-        "stats": new_stats,
-    }
-    tmp = f"{log_dir}/_tmp-{uuid.uuid4().hex}.json"
-    _write_text(fs, jvm, tmp, json.dumps(new_manifest))
-    if not fs.rename(_hp(jvm, tmp), _hp(jvm, f"{log_dir}/{_manifest_name(version)}")):
-        fs.delete(_hp(jvm, tmp), False)
-        raise CommitConflict(
-            f"version {version} committed concurrently at {path}; re-run "
-            "the compaction against the new head (the carry-over base is stale)"
-        )
+    small_df = _read_files(spark, path, read["schema"], candidates).coalesce(target_files)
+    m = _write(
+        spark, path, small_df, "compact", clock=clock, read=read, kept=kept,
+        stat_cols=_stat_cols(small_df.schema, stat_cols),
+    )
     return {
-        "version": version,
+        "version": m["version"],
         "files_rewritten": len(candidates),
         "files_kept": len(kept),
     }

@@ -39,25 +39,20 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-_LOG_DIR = "_log"
+from pipelines_spark.sinks.snapshots import (
+    LOG_DIR,
+    change_files,
+    manifest_name,
+    manifest_versions,
+)
 
 
 def _versions(log_dir: Path) -> list[int]:
-    if not log_dir.is_dir():
-        return []
-    out = []
-    for p in log_dir.iterdir():
-        name = p.name
-        if name.startswith("v") and name.endswith(".json"):
-            try:
-                out.append(int(name[1:-5]))
-            except ValueError:
-                continue
-    return sorted(out)
+    return manifest_versions(p.name for p in log_dir.iterdir()) if log_dir.is_dir() else []
 
 
 def _manifest(log_dir: Path, version: int) -> dict:
-    return json.loads((log_dir / f"v{version:08d}.json").read_text())
+    return json.loads((log_dir / manifest_name(version)).read_text())
 
 
 class SnapshotTableDataSource(DataSource):
@@ -77,7 +72,7 @@ class SnapshotTableDataSource(DataSource):
         return Path(path.removeprefix("file:"))
 
     def schema(self):
-        log_dir = self._table_path() / _LOG_DIR
+        log_dir = self._table_path() / LOG_DIR
         versions = _versions(log_dir)
         if not versions:
             raise FileNotFoundError(f"no snapshot log under {log_dir}")
@@ -98,7 +93,7 @@ class SnapshotStreamReader(DataSourceStreamReader):
     def __init__(self, schema: StructType, table_path: Path):
         self.schema_ = schema
         self.table_path = table_path
-        self.log_dir = table_path / _LOG_DIR
+        self.log_dir = table_path / LOG_DIR
 
     def initialOffset(self) -> dict:
         # start BEFORE the first committed version: the first batch
@@ -111,14 +106,11 @@ class SnapshotStreamReader(DataSourceStreamReader):
         return {"version": versions[-1] if versions else 0}
 
     def partitions(self, start: dict, end: dict):
-        files: list[str] = []
-        for v in _versions(self.log_dir):
-            if start["version"] < v <= end["version"]:
-                m = _manifest(self.log_dir, v)
-                if m["operation"] in ("compact", "delete"):
-                    # rewritten files of already-streamed rows
-                    continue
-                files.extend(m["added"])
+        files = change_files([
+            _manifest(self.log_dir, v)
+            for v in _versions(self.log_dir)
+            if start["version"] < v <= end["version"]
+        ])
         if not files:
             # Spark requires >= 1 partition; an empty marker partition
             # yields no rows

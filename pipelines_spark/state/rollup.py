@@ -25,22 +25,22 @@ three years.
 
 from __future__ import annotations
 
-import json
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pipelines_spark.sinks.snapshots import (
+    APPEND_ONLY,
+    LOG_DIR,
     _fs,
-    _hp,
     _list_versions,
     _load_manifest,
-    _read_text,
+    _write,
     current_version,
     snapshot_changes,
     snapshot_history,
     snapshot_read,
-    snapshot_write,
 )
 
 #: distributive aggregates a rollup can maintain incrementally
@@ -63,7 +63,7 @@ def _covered_version(spark: SparkSession, rollup_path: str) -> int | None:
     its manifest under ``app:covered_source_version``), or None for a
     first run."""
     fs, jvm = _fs(spark, rollup_path)
-    log_dir = f"{rollup_path}/_log"
+    log_dir = f"{rollup_path}/{LOG_DIR}"
     versions = _list_versions(fs, jvm, log_dir)
     if not versions:
         return None
@@ -107,7 +107,7 @@ def run_incremental_rollup(
         bad = [
             h for h in snapshot_history(spark, source_path)
             if covered < h["version"] <= src_version
-            and h["operation"] not in ("append", "compact")
+            and h["operation"] not in APPEND_ONLY
             # compact commits change no rows; snapshot_changes already
             # yields them as empty deltas
         ]
@@ -143,29 +143,13 @@ def run_incremental_rollup(
                 for out, (agg, _src) in measures.items()
             ],
         )
-    version = snapshot_write(
-        spark, rollup_path, merged, mode="overwrite",
-        **({"clock": clock} if clock else {}),
+    # the covered source version commits in the same manifest as the
+    # data: one rename, so a crash cannot separate them
+    _write(
+        spark, rollup_path, merged, "overwrite", clock=clock or time.time,
+        app={"covered_source_version": src_version},
     )
-    _record_covered(spark, rollup_path, version, src_version)
     return {"source_version": src_version, "rows_delta": n_delta, "action": "merged" if covered is not None else "bootstrap"}
-
-
-def _record_covered(
-    spark: SparkSession, rollup_path: str, rollup_version: int, src_version: int
-) -> None:
-    """Stamp the covered source version into the rollup manifest.
-    Same-file rewrite AFTER the commit won the rename: the manifest is
-    already the committed version, adding app metadata is idempotent."""
-    fs, jvm = _fs(spark, rollup_path)
-    mpath = f"{rollup_path}/_log/v{rollup_version:08d}.json"
-    manifest = json.loads(_read_text(fs, jvm, mpath))
-    manifest.setdefault("app", {})["covered_source_version"] = src_version
-    out = fs.create(_hp(jvm, mpath), True)
-    try:
-        out.write(bytearray(json.dumps(manifest).encode("utf-8")))
-    finally:
-        out.close()
 
 
 def full_rollup_rebuild(
@@ -186,9 +170,8 @@ def full_rollup_rebuild(
         for out, (agg, src) in measures.items()
     ]
     merged = full.groupBy(*keys).agg(*aggs)
-    version = snapshot_write(
-        spark, rollup_path, merged, mode="overwrite",
-        **({"clock": clock} if clock else {}),
+    _write(
+        spark, rollup_path, merged, "overwrite", clock=clock or time.time,
+        app={"covered_source_version": src_version},
     )
-    _record_covered(spark, rollup_path, version, src_version)
     return {"source_version": src_version, "rows_delta": full.count(), "action": "rebuild"}

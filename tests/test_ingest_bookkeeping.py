@@ -10,7 +10,7 @@ import os
 import subprocess
 import sys
 import time
-from datetime import datetime
+from datetime import datetime, timedelta
 
 import pytest
 
@@ -24,7 +24,7 @@ from pipelines_spark.flows import (
     run_materialization,
 )
 from pipelines_spark.plans.models import ModelRunner, SqlModel
-from pipelines_spark.sinks.logs import LOG_SCHEMA, literal_rows
+from pipelines_spark.sinks.logs import LOG_SCHEMA, append_capture_log, literal_rows
 from pipelines_spark.sinks.partitioned import create_staging_table
 from pipelines_spark.sources.files import read_with_quarantine
 from pipelines_spark.state.watermark import STATE_SCHEMA, WatermarkStore
@@ -157,6 +157,58 @@ def test_ingest_path_builds_no_python_rows(spark, tmp_path, monkeypatch):
     assert run_materialization(
         spark, runner, store, model_name="no_py_rows_hourly", now=t1,
     ) is None
+
+
+def test_gap_read_prunes_the_capture_log_to_the_spine_days(spark, tmp_path, monkeypatch):
+    """recapture_missing reads the capture log with its known schema and
+    only the partitions of the spine's days: as the log grows from 4 to
+    40 daily partitions, the gap read runs no schema-inference job,
+    reads only the spine day's files and finds the same gaps."""
+    import pipelines_spark.flows as flows
+
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    logs = str(tmp_path / "logs")
+    find_gaps, log_reads, replayed = flows.find_gaps, [], []
+
+    def recording_find_gaps(spine, log, **kw):
+        log_reads.append(log)
+        return find_gaps(spine, log, **kw)
+
+    monkeypatch.setattr(flows, "find_gaps", recording_find_gaps)
+    monkeypatch.setattr(flows, "run_capture_window",
+                        lambda _spark, _fetch, **kw: replayed.append(kw["window_end"]))
+    day0, grown, non_listing_jobs = datetime(2024, 1, 1), 0, {}
+    for size in (4, 40):
+        append_capture_log(spark, logs, [day0 + timedelta(days=d) for d in range(grown, size)],
+                           success=True)
+        grown, last = size, day0 + timedelta(days=size - 1)
+        append_capture_log(spark, logs, [last + timedelta(minutes=1)], success=False)
+        group = f"gap-read-{size}"
+        sc.setJobGroup(group, group)
+        try:
+            n = recapture_missing(
+                spark, None, spine_start=str(last), spine_end=str(last + timedelta(minutes=2)),
+                interval="1 minute", keys=["k"], staging_path=str(tmp_path / "stg"),
+                logs_path=logs,
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert n == 2
+        assert replayed[-2:] == [last + timedelta(minutes=1), last + timedelta(minutes=2)]
+        # the spine's day holds two files: its success row and its failure row
+        assert log_reads[-1].select(F.input_file_name()).distinct().count() == 2
+        jobs = [store.job(j) for j in sc.statusTracker().getJobIdsForGroup(group)]
+        # partition discovery may list the log's directories in a job
+        # of its own; any other file-source job is schema inference
+        non_listing = [
+            j.name() for j in jobs
+            if not (j.description().isDefined()
+                    and j.description().get().startswith("Listing leaf files"))
+        ]
+        assert not [name for name in non_listing if name.startswith("parquet at")], non_listing
+        non_listing_jobs[size] = len(non_listing)
+    assert non_listing_jobs[4] == non_listing_jobs[40]
 
 
 def test_dump_flow_releases_the_quarantine_cache(spark, tmp_path):

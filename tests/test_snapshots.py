@@ -299,3 +299,122 @@ def test_randomized_op_sequences_match_model(spark, tmp_path):
             assert table_rows(path, version=ver) == history[ver], (
                 f"seed={seed} version={ver}"
             )
+
+
+def test_one_commit_path_no_manifest_written_in_place(spark, tmp_path, monkeypatch):
+    """Structural guard for the one commit path (sinks/snapshots.py
+    docstring): every version is one rename of a complete manifest.
+    With every direct write of a ``_log/v*.json`` made to crash, each
+    writer still commits its version through ``_commit``, complete
+    with its operation, stats, Bloom filters and app metadata — so a
+    compaction is never replayed as an overwrite by the change feed.
+    A writer that writes a manifest in place fails here."""
+    import inspect
+    import re
+
+    from pyspark.sql import functions as F
+
+    import pipelines_spark.sinks.snapshots as snap
+    from pipelines_spark.state.rollup import run_incremental_rollup
+
+    assert inspect.getsource(snap).count("fs.rename(") == 1
+
+    write_text, commit = snap._write_text, snap._commit
+    committed = []
+
+    def crash_on_manifest(fs, jvm, path, text):
+        if re.search(r"/_log/v\d+\.json$", path):
+            raise OSError(f"crash while writing {path}")
+        write_text(fs, jvm, path, text)
+
+    def recording_commit(fs, jvm, log_dir, manifest):
+        won = commit(fs, jvm, log_dir, manifest)
+        committed.extend([(log_dir, manifest["version"])] if won else [])
+        return won
+
+    monkeypatch.setattr(snap, "_write_text", crash_on_manifest)
+    monkeypatch.setattr(snap, "_commit", recording_commit)
+
+    table, rollup = str(tmp_path / "crash"), str(tmp_path / "crash_rollup")
+    thirty = spark.range(30).select(
+        F.col("id").cast("int").alias("id"), F.concat(F.lit("v"), F.col("id")).alias("v")
+    ).coalesce(2)
+    head_before_compaction = 3
+
+    def publish():
+        snap.publish_snapshot(spark, table, snap.snapshot_write_staged(
+            spark, table, _df(spark, [(40, "p")])))
+
+    # (writer, what its committed manifest must hold)
+    writers = [
+        (lambda: snap.snapshot_write(spark, table, thirty),
+         lambda m: m["operation"] == "append"),
+        (lambda: snap.snapshot_write_with_stats(spark, table, _df(spark, [(30, "s")])),
+         lambda m: set(m["stats"]) == set(m["added"]) and m["stats"][m["added"][-1]]),
+        (lambda: snap.snapshot_write_with_blooms(
+            spark, table, _df(spark, [(31, "b")]), bloom_cols=["id"]),
+         lambda m: set(m["blooms"]) == set(m["stats"]) == set(m["added"])),
+        (lambda: snap.compact_snapshot(spark, table, target_files=1),
+         lambda m: m["operation"] == "compact" and set(m["stats"]) == set(m["added"])),
+        (lambda: snap.snapshot_merge(spark, table, _df(spark, [(1, "m")]), keys=["id"]),
+         lambda m: m["operation"] == "overwrite"),
+        (lambda: snap.snapshot_delete_where(
+            spark, table, F.col("id") == 2, prune_col="id", prune_lo=2, prune_hi=2),
+         lambda m: m["operation"] == "delete" and "stats" in m),
+        (publish, lambda m: m["operation"] == "append"),
+        (lambda: snap.compact_small_files(spark, table, small_file_mb=64, target_files=1),
+         lambda m: m["operation"] == "compact" and "stats" in m),
+        (lambda: snap.snapshot_write(spark, table, _df(spark, [(50, "t")]), txn=("app", 0)),
+         lambda m: m["txn"] == {"app": "app", "batch": 0}),
+    ]
+    for i, (write, complete) in enumerate(writers, start=1):
+        try:
+            write()
+        except OSError:
+            pass  # a crashed writer may commit nothing, never half a version
+        assert current_version(spark, table) == i
+        manifest = json.load(open(f"{table}/_log/v{i:08d}.json"))
+        assert complete(manifest), manifest
+        if i == head_before_compaction + 1:
+            assert snapshot_changes(spark, table, since_version=head_before_compaction).count() == 0
+    assert snapshot_read(spark, table).count() == 33
+
+    run_incremental_rollup(spark, table, rollup, keys=["v"], measures={"n": ("count", "id")})
+    assert json.load(open(f"{rollup}/_log/v00000001.json"))["app"] == {
+        "covered_source_version": len(writers)
+    }
+    assert committed == [(f"{table}/_log", i) for i in range(1, len(writers) + 1)] + [
+        (f"{rollup}/_log", 1)
+    ]
+    assert not [f for d in (table, rollup) for f in os.listdir(f"{d}/_log") if f.startswith("_tmp")]
+
+
+@pytest.mark.parametrize("rewrite", ["compact_snapshot", "snapshot_merge"])
+def test_rewrite_conflicts_with_a_racing_append(spark, tmp_path, monkeypatch, rewrite):
+    """A rewrite commits on exactly the version it read: an append that
+    lands between its read and its commit makes it raise
+    CommitConflict, and the racer's rows stay in the table."""
+    from pyspark.sql import DataFrameWriter
+    from pyspark.sql import functions as F
+
+    import pipelines_spark.sinks.snapshots as snap
+
+    table = str(tmp_path / "race")
+    snapshot_write(spark, table, spark.range(30).select(
+        F.col("id").cast("int").alias("id"), F.lit("v").alias("v")))
+    parquet, raced = DataFrameWriter.parquet, []
+
+    def racing_parquet(self, path, *args, **kwargs):
+        parquet(self, path, *args, **kwargs)
+        if not raced:  # the rewrite's own data write: a racer commits now
+            raced.append(path)
+            snapshot_write(spark, table, _df(spark, [(100 + i, "r") for i in range(5)]))
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", racing_parquet)
+    with pytest.raises(CommitConflict):
+        if rewrite == "compact_snapshot":
+            snap.compact_snapshot(spark, table, target_files=1)
+        else:
+            snap.snapshot_merge(spark, table, _df(spark, [(1, "m")]), keys=["id"])
+    monkeypatch.undo()
+    assert raced and snapshot_read(spark, table).count() == 35
