@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pipelines_spark.naming import quote_name
+
 
 def nest_payload(
     df: DataFrame,
@@ -30,12 +32,12 @@ def nest_payload(
     all-string by contract, SURVEY §1.2) so JSON formatting is stable
     across engines and re-runs.
     """
-    payload = [c for c in df.columns if c not in keys and c != capture_ts_col]
-    struct = F.struct(*[F.col(c).cast("string").alias(c) for c in payload])
-    out = [*(F.col(k) for k in keys), F.to_json(struct).alias(content_col)]
+    payload = [quote_name(c) for c in df.columns if c not in keys and c != capture_ts_col]
+    struct = ", ".join(f"CAST({q} AS STRING) AS {q}" for q in payload)
+    out = [*map(quote_name, keys), f"to_json(struct({struct})) AS {quote_name(content_col)}"]
     if capture_ts_col and capture_ts_col in df.columns:
-        out.append(F.col(capture_ts_col))
-    return df.select(*out)
+        out.append(quote_name(capture_ts_col))
+    return df.selectExpr(*out)
 
 
 def unnest_payload(

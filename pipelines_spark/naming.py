@@ -40,6 +40,14 @@ def normalize_column_name(name: str, index: int = 0) -> str:
     return cleaned
 
 
+def quote_name(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier, for the expression
+    strings of ``selectExpr``/``F.expr``: a projection over many columns
+    is then parsed in one JVM call, where building a ``Column`` per
+    column costs py4j round trips (about 1 ms each)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def normalize_names(names: list[str]) -> list[str]:
     """Normalize a schema's worth of names, de-duplicating collisions
     with positional suffixes (two distinct raw names must never merge

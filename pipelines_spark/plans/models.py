@@ -26,6 +26,7 @@ from dataclasses import dataclass, field
 from graphlib import TopologicalSorter
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from pipelines_spark.sinks.partitioned import write_partitioned
 
@@ -124,7 +125,17 @@ class ModelRunner:
                     else "overwrite_partitions"
                 )
                 write_partitioned(df, model.path, model.partition_cols, mode=mode)
-                self.spark.read.parquet(model.path).createOrReplaceTempView(name)
+                # the schema just written: data columns, then the
+                # partition columns as the strings their directory
+                # names are, so registering infers nothing (no job)
+                schema = T.StructType(
+                    [T.StructField(f.name, f.dataType) for f in df.schema
+                     if f.name not in model.partition_cols]
+                    + [T.StructField(c, T.StringType()) for c in model.partition_cols]
+                )
+                self.spark.read.schema(schema).parquet(
+                    model.path
+                ).createOrReplaceTempView(name)
             else:
                 raise ValueError(f"unknown materialization {model.materialization}")
             out[name] = df

@@ -32,6 +32,8 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pipelines_spark.naming import quote_name
+
 
 def write_partitioned(
     df: DataFrame,
@@ -480,7 +482,7 @@ def write_bucketed_table(
 def to_all_string(df: DataFrame) -> DataFrame:
     """Apply the all-string staging contract (SURVEY §1.2): every
     column cast to string; typed views SAFE_CAST back downstream."""
-    return df.select(*[F.col(c).cast("string").alias(c) for c in df.columns])
+    return df.selectExpr(*(f"CAST({q} AS STRING) AS {q}" for q in map(quote_name, df.columns)))
 
 
 def vacuum_partitions(

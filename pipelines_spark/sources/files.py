@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pipelines_spark.llm.dedup import _attach_staging
-from pipelines_spark.naming import normalize_columns
+from pipelines_spark.naming import normalize_columns, quote_name
 
 
 def read_parquet_normalized(spark: SparkSession, path: str) -> DataFrame:
@@ -126,9 +126,10 @@ def read_with_quarantine(
     # re-parse after the cache is released read every column: Spark
     # refuses a scan of the corrupt-record column alone, and its CSV
     # column pruning would judge a row by the columns read only
-    raw = F.coalesce(
-        F.col("_corrupt_record"),
-        F.concat_ws(",", *(F.col(c).cast("string") for c in scan.columns[:-1])),
+    raw = F.expr(
+        "coalesce(_corrupt_record, concat_ws(',', "
+        + ", ".join(f"CAST({quote_name(c)} AS STRING)" for c in scan.columns[:-1])
+        + "))"
     )
     bad = df.filter(F.col("_corrupt_record").isNotNull()).select(
         raw.alias("raw_record"),

@@ -16,12 +16,16 @@ appends), so concurrent writers can't lose advances. At cluster scale
 this table stays tiny (one row per table/key), always broadcast in
 joins against fact data.
 
-A ``set_table_watermark`` appends its rows as literal columns
-(``sinks/logs.py::literal_rows``) in one write: no Python worker, the
-cost of a one-row file. Whether the table exists yet is asked of the
-Hadoop FileSystem of its path (``sinks/partitioned.py::_hadoop_fs``),
-so a store at a ``file://``, ``hdfs://`` or ``s3a://`` URI reads back
-what it wrote, like one at a bare local path.
+Rows built on the driver go through ``sinks/logs.py::append_rows``;
+frames computed by Spark are written by Spark. So a
+``set_table_watermark`` appends its one row as a parquet file that
+the driver encodes and renames into place: no Spark job, no Python
+worker. ``advance_from`` aggregates a batch, and its result is written
+by a distributed Spark write that never passes through the driver.
+Whether the table exists yet is asked of the Hadoop FileSystem of its
+path (``sinks/partitioned.py::_hadoop_fs``), so a store at a
+``file://``, ``hdfs://`` or ``s3a://`` URI reads back what it wrote,
+like one at a bare local path.
 """
 
 from __future__ import annotations
@@ -32,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pipelines_spark.sinks.logs import literal_rows
+from pipelines_spark.sinks.logs import append_rows
 from pipelines_spark.sinks.partitioned import _hadoop_fs
 
 STATE_SCHEMA = T.StructType(
@@ -57,9 +61,8 @@ class WatermarkStore:
 
     def _read(self) -> DataFrame:
         fs, hpath = _hadoop_fs(self.spark, self.path)
-        if not fs.exists(hpath):
-            return literal_rows(self.spark, STATE_SCHEMA, [])
-        return self.spark.read.schema(STATE_SCHEMA).parquet(self.path)
+        paths = [self.path] if fs.exists(hpath) else []
+        return self.spark.read.schema(STATE_SCHEMA).parquet(*paths)
 
     def current(self, scope: str) -> DataFrame:
         """Effective per-key watermarks for a scope (max over appends)."""
@@ -167,5 +170,4 @@ class WatermarkStore:
         # UTC wall clock, tz stripped: the audit column is NTZ by
         # convention and utcnow() is deprecated
         now = datetime.now(timezone.utc).replace(tzinfo=None)
-        out = literal_rows(self.spark, STATE_SCHEMA, [(*r, now) for r in rows])
-        out.write.mode("append").parquet(self.path)
+        append_rows(self.spark, self.path, STATE_SCHEMA, [(*r, now) for r in rows])

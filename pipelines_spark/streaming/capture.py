@@ -29,6 +29,8 @@ so a replay may repeat it (sinks/logs.py).
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -83,13 +85,8 @@ def run_capture_stream(
                 # the drift monitor logs its per-window verdicts into
                 # the SAME table
                 write_log_rows(
-                    batch_df.sparkSession.range(1).select(
-                        F.current_timestamp().alias("timestamp_captura"),
-                        F.lit(True).alias("sucesso"),
-                        F.lit(None).alias("erro"),
-                        F.lit(batch_id).alias("batch_id"),
-                    ),
-                    log_path,
+                    batch_df.sparkSession, log_path,
+                    [(time.time_ns() // 1000, True, None, batch_id)],
                 )
         finally:
             batch_df.unpersist()

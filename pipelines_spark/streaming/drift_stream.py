@@ -287,14 +287,14 @@ def run_drift_monitor_stream(
                     ).cast("string"),
                 ),
             )
+            # one verdict per closed window: a bounded collect, each
+            # instant as epoch micros so no local-time conversion moves it
+            verdicts = scored.select(
+                F.unix_micros("window_start"), ~(drift | null_breach), erro
+            ).collect()
             write_log_rows(
-                scored.select(
-                    F.lit(batch_id).alias("batch_id"),
-                    (~(drift | null_breach)).alias("sucesso"),
-                    erro.alias("erro"),
-                    F.col("window_start").alias("timestamp_captura"),
-                ),
-                log_path,
+                batch_df.sparkSession, log_path,
+                [(ts, ok, err, batch_id) for ts, ok, err in verdicts],
             )
         finally:
             batch_df.unpersist()

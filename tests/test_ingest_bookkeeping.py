@@ -1,11 +1,12 @@
 """Ingest bookkeeping at the cost of its own rows: capture-log and
-watermark rows built as JVM literals (no Python worker), a watermark
-store that reads back on any Hadoop URI, a staging table registered
-once per session, and a quarantine cache released by the flow that
-consumed it."""
+watermark rows written by the driver (no Spark job, no Python worker)
+and read back on any Hadoop URI, a staging table registered once per
+session, and a quarantine cache released by the flow that consumed
+it."""
 
 from __future__ import annotations
 
+import json
 import os
 import subprocess
 import sys
@@ -24,17 +25,30 @@ from pipelines_spark.flows import (
     run_materialization,
 )
 from pipelines_spark.plans.models import ModelRunner, SqlModel
-from pipelines_spark.sinks.logs import LOG_SCHEMA, append_capture_log, literal_rows
+from pipelines_spark.sinks import logs as log_sink
+from pipelines_spark.sinks.logs import (
+    LOG_SCHEMA,
+    append_capture_log,
+    append_rows,
+    read_log,
+    write_log_rows,
+)
 from pipelines_spark.sinks.partitioned import create_staging_table
 from pipelines_spark.sources.files import read_with_quarantine
 from pipelines_spark.state.watermark import STATE_SCHEMA, WatermarkStore
 
 TIMESTAMPS = [
     datetime(2024, 1, 1, 0, 0),
-    datetime(2024, 2, 18, 23, 30, 0, 123456),  # Sao Paulo DST end
+    datetime(2024, 2, 18, 23, 30, 0, 123456),
+    datetime(2019, 2, 16, 23, 30),  # Sao Paulo DST end: an hour that repeats
     datetime(2018, 11, 4, 0, 30),  # Sao Paulo DST gap
     datetime(1969, 12, 31, 23, 59, 59, 999999),
 ]
+
+
+def _wait_for_listeners(sc):
+    """Let the status store see every job event posted so far."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
 
 
 def _jobs_in(sc, group: str, fn) -> list[int]:
@@ -43,40 +57,225 @@ def _jobs_in(sc, group: str, fn) -> list[int]:
         fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+    _wait_for_listeners(sc)
     return list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.mark.parametrize("tz", ["UTC", "America/Sao_Paulo"])
-def test_literal_rows_equal_create_dataframe_rows(spark, monkeypatch, tz):
-    """Both builders turn a naive datetime into an instant by the
-    Python process's local time; the stored micros must be identical,
-    also where the local zone has DST gaps and overlaps."""
+def test_append_rows_equal_create_dataframe_rows(spark, tmp_path, monkeypatch, tz):
+    """Rows the driver writes read back as the rows ``createDataFrame``
+    builds: a naive datetime becomes an instant by the Python process's
+    local time, also where that zone has DST gaps and overlaps. The
+    ``data`` directory of a log row is its instant's day in the session
+    time zone, as Spark formats it, and the parquet types are the
+    ones Spark reads as the schema's."""
+    import pyarrow.parquet as pq
+
     monkeypatch.setenv("TZ", tz)
     time.tzset()
+    spark.conf.set("spark.sql.session.timeZone", tz)
     try:
-        for schema, rows in (
-            (LOG_SCHEMA, [(ts, i % 2 == 0, None if i else "x", None)
-                          for i, ts in enumerate(TIMESTAMPS)]),
-            (STATE_SCHEMA, [("s", "k", ts, None if i else 7, ts)
-                            for i, ts in enumerate(TIMESTAMPS)]
+        for name, schema, rows in (
+            ("log", LOG_SCHEMA, [(ts, i % 2 == 0, None if i else "x", None if i else 3)
+                                 for i, ts in enumerate(TIMESTAMPS)]),
+            ("wm", STATE_SCHEMA, [("s", "k", ts, None if i else 7, ts)
+                                  for i, ts in enumerate(TIMESTAMPS)]
              + [("s", "k", None, 1, TIMESTAMPS[0])]),
         ):
             def micros(df):
-                return df.select(
+                return sorted(df.select(
                     *(F.unix_micros(f.name).alias(f.name)
                       if f.name in ("timestamp_captura", "watermark_ts", "updated_at")
                       else F.col(f.name)
                       for f in schema)
-                ).collect()
+                ).collect(), key=repr)
 
-            lit = literal_rows(spark, schema, rows)
-            assert [f.dataType for f in lit.schema] == [f.dataType for f in schema]
-            assert lit.rdd.getNumPartitions() == 1
-            assert micros(lit) == micros(spark.createDataFrame(rows, schema))
-        assert literal_rows(spark, LOG_SCHEMA, []).count() == 0
+            path = str(tmp_path / name)
+            if schema is LOG_SCHEMA:
+                write_log_rows(spark, path, rows)
+            else:
+                append_rows(spark, path, schema, rows)
+            back = spark.read.parquet(path)
+            assert [(f.name, f.dataType) for f in back.schema.fields[: len(schema)]] == [
+                (f.name, f.dataType) for f in schema
+            ]
+            assert micros(back) == micros(spark.createDataFrame(rows, schema))
+            if schema is LOG_SCHEMA:
+                assert back.filter(
+                    F.col("data") != F.date_format("timestamp_captura", "yyyy-MM-dd")
+                ).count() == 0
+            one = next(p for p in (tmp_path / name).rglob("*.parquet"))
+            ts_type = pq.ParquetFile(one).schema.column(schema.names.index(
+                "timestamp_captura" if schema is LOG_SCHEMA else "updated_at")).logical_type
+            ts_type = json.loads(ts_type.to_json())
+            assert (ts_type["isAdjustedToUTC"], ts_type["timeUnit"]) == (True, "microseconds")
+        write_log_rows(spark, str(tmp_path / "none"), [])
+        assert not (tmp_path / "none").exists()
     finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
         monkeypatch.delenv("TZ")
         time.tzset()
+
+
+def test_multi_day_append_writes_one_file_per_day(spark, tmp_path):
+    logs = tmp_path / "logs"
+    days = [datetime(2024, 1, d, h) for d in (1, 2, 3) for h in (0, 12, 23)]
+    append_capture_log(spark, str(logs), days, success=True)
+    files = sorted(p.relative_to(logs).parts[0] for p in logs.rglob("*.parquet"))
+    assert files == ["data=2024-01-01", "data=2024-01-02", "data=2024-01-03"]
+    assert not list(logs.rglob(".*.parquet"))
+    got = read_log(spark, str(logs), "2024-01-02 00:00:00", "2024-01-03 00:00:00")
+    assert sorted(r["timestamp_captura"] for r in got.collect()) == days[3:]
+
+
+def test_crash_before_rename_leaves_the_table_as_before(spark, tmp_path, monkeypatch):
+    """A writer that dies after writing its file under the hidden temp
+    name, before the rename, leaves the table reading as before."""
+    logs = str(tmp_path / "logs")
+    append_capture_log(spark, logs, [datetime(2024, 1, 1, 0, 0)], success=True)
+    before = sorted(spark.read.parquet(logs).collect())
+    real = log_sink._hadoop_fs
+
+    class CrashBeforeRename:
+        def __init__(self, fs):
+            self.fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self.fs, name)
+
+        def rename(self, *_a):
+            raise OSError("crash before the rename")
+
+    def crashing_fs(spark_, path):
+        fs, root = real(spark_, path)
+        return CrashBeforeRename(fs), root
+
+    monkeypatch.setattr(log_sink, "_hadoop_fs", crashing_fs)
+    with pytest.raises(OSError, match="crash before the rename"):
+        append_capture_log(spark, logs, [datetime(2024, 1, 1, 0, 1)], success=False)
+    monkeypatch.undo()
+    assert len(list((tmp_path / "logs").rglob(".part-*.parquet"))) == 1, "no temp file"
+    assert sorted(spark.read.parquet(logs).collect()) == before
+    got = read_log(spark, logs, "2024-01-01 00:00:00", "2024-01-01 00:01:00")
+    assert [r["timestamp_captura"] for r in got.collect()] == [datetime(2024, 1, 1, 0, 0)]
+
+
+def test_capture_log_roundtrip_on_file_uri(spark, tmp_path):
+    uri = f"file://{tmp_path}/logs"
+    append_capture_log(spark, uri, [datetime(2024, 1, 2, 3, 4)], success=True)
+    append_capture_log(spark, uri, [datetime(2024, 1, 3, 0, 0)], success=False, error="e")
+    for path in (uri, str(tmp_path / "logs")):
+        got = read_log(spark, path, "2024-01-02 00:00:00", "2024-01-03 12:00:00")
+        assert sorted((r["timestamp_captura"], r["sucesso"], r["erro"], r["data"])
+                      for r in got.collect()) == [
+            (datetime(2024, 1, 2, 3, 4), True, None, "2024-01-02"),
+            (datetime(2024, 1, 3, 0, 0), False, "e", "2024-01-03"),
+        ]
+    assert read_log(spark, uri, "2024-02-01 00:00:00", "2024-02-02 00:00:00").count() == 0
+
+
+def test_bookkeeping_rows_launch_no_spark_jobs(spark, tmp_path, monkeypatch):
+    """A capture-log append, a table watermark and the capture stream's
+    per-batch success row are written by the driver: 0 Spark jobs."""
+    import pipelines_spark.streaming.capture as capture
+
+    sc = spark.sparkContext
+    logs = str(tmp_path / "logs")
+    store = WatermarkStore(spark, str(tmp_path / "wm"))
+    for i, fn in enumerate((
+        lambda: append_capture_log(spark, logs, [datetime(2024, 1, 1, 0, 0)], success=True),
+        lambda: store.set_table_watermark("t", ts=datetime(2024, 1, 1), id_=1),
+        lambda: store.set_table_watermark("t", ts=datetime(2024, 1, 2), id_=2),
+    )):
+        assert _jobs_in(sc, f"bookkeeping-{i}", fn) == [], i
+    assert store.get_table_watermark("t") == (datetime(2024, 1, 2), 2)
+
+    # the stream's own log write, timed from inside its micro-batch
+    write, stream_jobs = capture.write_log_rows, []
+
+    def counted_write(spark_, path, rows):
+        tracker = spark_.sparkContext.statusTracker()
+        group = spark_.sparkContext.getLocalProperty("spark.jobGroup.id")
+        _wait_for_listeners(spark_.sparkContext)
+        seen = set(tracker.getJobIdsForGroup(group))
+        write(spark_, path, rows)
+        _wait_for_listeners(spark_.sparkContext)
+        stream_jobs.append(set(tracker.getJobIdsForGroup(group)) - seen)
+
+    monkeypatch.setattr(capture, "write_log_rows", counted_write)
+    src = str(tmp_path / "src")
+    spark.range(2).select(
+        F.col("id").cast("string").alias("ordem"),
+        F.timestamp_seconds(F.lit(1704067200) + F.col("id")).alias("datahora"),
+    ).coalesce(1).write.parquet(src)
+    q = capture.run_capture_stream(
+        spark.readStream.schema("ordem string, datahora timestamp").parquet(src),
+        keys=["ordem"], event_ts_col="datahora", raw_path=str(tmp_path / "raw"),
+        staging_path=str(tmp_path / "stg"), checkpoint_path=str(tmp_path / "ckpt"),
+        log_path=str(tmp_path / "stream_logs"),
+    )
+    assert q.awaitTermination(120)
+    assert stream_jobs and all(jobs == set() for jobs in stream_jobs), stream_jobs
+    logged = spark.read.parquet(str(tmp_path / "stream_logs")).select("batch_id").collect()
+    assert sorted(r["batch_id"] for r in logged) == list(range(len(stream_jobs)))
+
+
+def test_drift_verdict_rows_are_unchanged(spark, tmp_path, monkeypatch):
+    """The drift monitor's verdict rows, now collected and written by
+    the driver, equal the rows the monitor logged when Spark wrote
+    them (values recorded from that writer). One window starts at an
+    instant whose Sao Paulo wall time repeats (the 2019 DST end), with
+    both the process and the session in that zone: the instants are
+    carried as epoch micros, so none shifts, and each ``data`` is the
+    session day."""
+    from pipelines_spark.streaming.drift_stream import (
+        reference_histogram,
+        run_drift_monitor_stream,
+    )
+
+    monkeypatch.setenv("TZ", "America/Sao_Paulo")
+    time.tzset()
+    base = 1550365200  # 2019-02-17 01:00 UTC, 23:00 in Sao Paulo (DST)
+    ref = spark.range(1000).select((F.col("id") % 100 / 10).alias("value"))
+    vmin, vmax, shares = reference_histogram(ref, "value", bins=10)
+    src = str(tmp_path / "src")
+    spark.range(300).select(
+        F.timestamp_seconds(
+            F.lit(base) + (F.col("id") / 100).cast("int") * 3600 + F.col("id") % 100
+        ).alias("datahora"),
+        # window 1 like the reference, window 2 collapsed, window 3 40 % NULL
+        F.when(F.col("id") < 100, F.col("id") % 100 / 10)
+        .when(F.col("id") < 200, F.lit(0.05))
+        .when(F.col("id") % 5 < 2, F.lit(None))
+        .otherwise(F.col("id") % 100 / 10).cast("double").alias("value"),
+    ).unionByName(spark.range(1).select(  # a sentinel that closes the three windows
+        F.timestamp_seconds(F.lit(base + 9 * 3600)).alias("datahora"),
+        F.lit(5.0).alias("value"),
+    )).coalesce(1).write.parquet(src)
+    logs = str(tmp_path / "logs")
+    spark.conf.set("spark.sql.session.timeZone", "America/Sao_Paulo")
+    try:
+        for _ in range(2):
+            q = run_drift_monitor_stream(
+                spark.readStream.schema("datahora timestamp, value double").parquet(src),
+                value_col="value", ts_col="datahora", vmin=vmin, vmax=vmax, shares=shares,
+                histogram_path=str(tmp_path / "hist"), checkpoint_path=str(tmp_path / "ckpt"),
+                log_path=logs, bins=10, window="1 hour", watermark_delay="1 minute",
+                max_null_frac=0.25,
+            )
+            assert q.awaitTermination(300)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        monkeypatch.delenv("TZ")
+        time.tzset()
+    rows = sorted(tuple(r) for r in spark.read.parquet(logs).select(
+        F.unix_micros("timestamp_captura"), "sucesso", "erro", "batch_id", "data"
+    ).collect())
+    assert rows == [
+        (1550365200000000, True, None, 1, "2019-02-16"),
+        (1550368800000000, False, "[values_drift]psi=8.2831 n_null=0", 1, "2019-02-16"),
+        (1550372400000000, False, "[null_values]null_frac=0.4", 1, "2019-02-17"),
+    ]
 
 
 def test_watermark_roundtrip_on_file_uri(spark, tmp_path):
@@ -162,8 +361,10 @@ def test_ingest_path_builds_no_python_rows(spark, tmp_path, monkeypatch):
 def test_gap_read_prunes_the_capture_log_to_the_spine_days(spark, tmp_path, monkeypatch):
     """recapture_missing reads the capture log with its known schema and
     only the partitions of the spine's days: as the log grows from 4 to
-    40 daily partitions, the gap read runs no schema-inference job,
-    reads only the spine day's files and finds the same gaps."""
+    40 daily partitions, the gap read runs no schema-inference job and
+    no file-listing job (above 32 directories Spark lists in a job of
+    its own), reads only the spine day's files and finds the same
+    gaps."""
     import pipelines_spark.flows as flows
 
     sc = spark.sparkContext
@@ -198,14 +399,17 @@ def test_gap_read_prunes_the_capture_log_to_the_spine_days(spark, tmp_path, monk
         assert replayed[-2:] == [last + timedelta(minutes=1), last + timedelta(minutes=2)]
         # the spine's day holds two files: its success row and its failure row
         assert log_reads[-1].select(F.input_file_name()).distinct().count() == 2
+        _wait_for_listeners(sc)
         jobs = [store.job(j) for j in sc.statusTracker().getJobIdsForGroup(group)]
-        # partition discovery may list the log's directories in a job
-        # of its own; any other file-source job is schema inference
-        non_listing = [
-            j.name() for j in jobs
-            if not (j.description().isDefined()
-                    and j.description().get().startswith("Listing leaf files"))
+        # a file-source job is either a listing of the log's
+        # directories or schema inference
+        listing = [
+            j.description().get() for j in jobs
+            if j.description().isDefined()
+            and j.description().get().startswith("Listing leaf files")
         ]
+        assert listing == [], listing
+        non_listing = [j.name() for j in jobs]
         assert not [name for name in non_listing if name.startswith("parquet at")], non_listing
         non_listing_jobs[size] = len(non_listing)
     assert non_listing_jobs[4] == non_listing_jobs[40]
@@ -310,3 +514,84 @@ new.stop()
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     assert "YEARS 1990,1991,1992,1993 8" in proc.stdout, proc.stdout[-2000:]
+
+
+def test_model_view_registers_the_written_schema_without_a_job(spark, tmp_path):
+    """A written model's view is registered with the schema it wrote:
+    a warm incremental run launches only the jobs of its write (no
+    schema-inference job), and the view reads the rows and schema a
+    plain read of the model's path does."""
+    from pipelines_spark.sinks.partitioned import write_partitioned
+
+    sc = spark.sparkContext
+    spark.range(12).selectExpr(
+        "id", "CAST(id % 3 AS STRING) AS data", "id * 1.5 AS v"
+    ).createOrReplaceTempView("mv_src")
+    model = SqlModel(
+        name="mv_incremental",
+        sql="SELECT data, count(*) AS n, sum(v) AS s FROM mv_src WHERE id >= {lo} GROUP BY data",
+        materialization="incremental", path=str(tmp_path / "model"), partition_cols=["data"],
+    )
+    runner = ModelRunner(spark, [model])
+    runner.run(variables={"lo": 0})
+    run_jobs = _jobs_in(sc, "mv-run", lambda: runner.run(variables={"lo": 1}))
+
+    def write_only():
+        write_partitioned(spark.sql(model.render({"lo": 1})), str(tmp_path / "copy"), ["data"])
+
+    write_only()
+    assert len(run_jobs) == len(_jobs_in(sc, "mv-write", write_only))
+    on_disk = spark.read.parquet(model.path)
+    assert spark.table("mv_incremental").schema == on_disk.schema
+    assert sorted(spark.table("mv_incremental").collect()) == sorted(on_disk.collect())
+    assert sorted(r["n"] for r in on_disk.collect()) == [3, 4, 4]
+
+
+def test_column_expressions_quote_any_name(spark, tmp_path):
+    """The all-string cast, the quarantine's raw-record fallback and the
+    nested payload build their per-column expressions as one parsed
+    projection: names with a backtick, a dot or a space round-trip,
+    and the output equals the per-``Column`` build's."""
+    from pipelines_spark.functions.json_ops import nest_payload
+    from pipelines_spark.llm.dedup import release_staging
+    from pipelines_spark.sinks.partitioned import to_all_string
+
+    odd = spark.range(2).selectExpr(
+        "id AS `a``b`", "id * 2 AS `x.y`", "CAST(id AS DOUBLE) / 4 AS `with space`",
+        "CAST(id = 1 AS BOOLEAN) AS flag",
+    )
+    names = ["a`b", "x.y", "with space", "flag"]
+    staged = to_all_string(odd)
+    assert staged.columns == names
+    assert {t for _c, t in staged.dtypes} == {"string"}
+    assert sorted(tuple(r) for r in staged.collect()) == [
+        ("0", "0", "0.0", "false"), ("1", "2", "0.25", "true"),
+    ]
+    plain = spark.range(3).selectExpr(
+        "id", "CAST(id AS DOUBLE) / 3 AS d", "DATE'2024-01-01' + CAST(id AS INT) AS day",
+        "TIMESTAMP'2024-01-01 00:00:00' AS ts", "CAST(NULL AS DECIMAL(18,6)) AS dec",
+    )
+    per_column = plain.select(*(F.col(c).cast("string").alias(c) for c in plain.columns))
+    assert to_all_string(plain).schema == per_column.schema
+    assert sorted(to_all_string(plain).collect()) == sorted(per_column.collect())
+
+    nested = nest_payload(odd.withColumn("timestamp_captura", F.lit(datetime(2024, 1, 1))),
+                          ["a`b"])
+    assert nested.columns == ["a`b", "content", "timestamp_captura"]
+    assert sorted((r["a`b"], json.loads(r["content"])) for r in nested.collect()) == [
+        (0, {"x.y": "0", "with space": "0.0", "flag": "false"}),
+        (1, {"x.y": "2", "with space": "0.25", "flag": "true"}),
+    ]
+    per_column = plain.select(F.col("id"), F.to_json(F.struct(
+        *(F.col(c).cast("string").alias(c) for c in plain.columns[1:])
+    )).alias("content"))
+    assert sorted(nest_payload(plain, ["id"]).collect()) == sorted(per_column.collect())
+
+    src = tmp_path / "odd.csv"
+    src.write_text("1,a\nx,b\n3,c\n")
+    good, bad = read_with_quarantine(spark, str(src), "`n.1` int, `v ``w` string")
+    assert good.columns == ["n.1", "v `w"]
+    assert sorted(tuple(r) for r in good.collect()) == [(1, "a"), (3, "c")]
+    assert [r["raw_record"] for r in bad.collect()] == ["x,b"]
+    release_staging(good)
+    assert [r["raw_record"] for r in bad.collect()] == ["x,b"]
