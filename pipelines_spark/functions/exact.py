@@ -24,14 +24,58 @@ resulting integer-valued quotient — small enough to be exact in a
 double — is recovered with `round(·, 0)`, which tolerates the ≤4-ulp
 error from representing the big numerator.
 
-`exact_mean` (Spark) and `exact_mean_sql` (DuckDB text, in
-oracles.py) are the shared implementations; keep them in lockstep.
+This module is the one writer of the engine's exact arithmetic:
+`queries.py` calls it for every exact float sum, exact mean and
+exact ratio and spells none of them out. Each Spark helper has a
+Spark-SQL text twin for SQL-string queries; keep every pair, and the
+DuckDB text in oracles.py (`_exact_mean_sql`), in lockstep:
+
+- `exact_sum` / `exact_sum_sql`: a float sum made exact by summing
+  `DECIMAL(18,6)` (addition order cannot move the result), optionally
+  rounded to `scale` decimals and cast back to DOUBLE;
+- `exact_mean` / `exact_mean_sparksql`: round-half-up of an exact sum
+  over a count;
+- `exact_div_round` / `exact_div_round_sql`: round-half-up of an exact
+  integer ratio.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+#: the type a float is summed in: the cast fixes each row's value at
+#: 6 decimals, and a sum of fixed-point values is exact in any order
+EXACT_SUM_TYPE = "DECIMAL(18,6)"
+
+
+def exact_sum(col: Column | str, scale: int | None = None) -> Column:
+    """Exact sum of a float column: ``sum(CAST(col AS DECIMAL(18,6)))``,
+    independent of addition order. With ``scale``, the DECIMAL sum is
+    rounded half-up to ``scale`` decimals and cast to DOUBLE."""
+    c = F.col(col) if isinstance(col, str) else col
+    total = F.sum(c.cast(EXACT_SUM_TYPE))
+    if scale is None:
+        return total
+    return F.round(total, scale).cast("double")
+
+
+def exact_sum_sql(
+    expr: str, scale: int | None = None, *, where: str | None = None
+) -> str:
+    """Spark-SQL text twin of :func:`exact_sum`. ``where`` makes it a
+    conditional sum (rows failing the predicate add an exact zero),
+    which SQL-string queries need for share numerators."""
+    if where is None:
+        total = f"sum(CAST({expr} AS {EXACT_SUM_TYPE}))"
+    else:
+        total = (
+            f"sum(CASE WHEN {where} THEN CAST({expr} AS {EXACT_SUM_TYPE})"
+            f" ELSE CAST(0 AS {EXACT_SUM_TYPE}) END)"
+        )
+    if scale is None:
+        return total
+    return f"CAST(round({total}, {scale}) AS DOUBLE)"
 
 
 def exact_mean(
@@ -119,5 +163,18 @@ def exact_mean_sparksql(
     q = f"((2 * abs({s}) * {up} + {half}) div (2 * {half}))"
     return (
         f"(CAST((CASE WHEN {s} < 0 THEN -{q} ELSE {q} END)"
+        f" / {float(10 ** out_scale)} AS DOUBLE))"
+    )
+
+
+def exact_div_round_sql(num: str, den: str, *, out_scale: int = 4) -> str:
+    """Spark-SQL text twin of :func:`exact_div_round`: ``num`` (any
+    sign) over ``den`` (positive), both exact integer expressions,
+    cast to DECIMAL(38,0) and divided with ``div``."""
+    n = f"CAST({num} AS DECIMAL(38,0))"
+    d = f"CAST({den} AS DECIMAL(38,0))"
+    q = f"((2 * abs({n}) * {10 ** out_scale} + ({d})) div (2 * ({d})))"
+    return (
+        f"(CAST((CASE WHEN {n} < 0 THEN -{q} ELSE {q} END)"
         f" / {float(10 ** out_scale)} AS DOUBLE))"
     )

@@ -903,7 +903,7 @@ def _sql_argmin_all_subs(
 #: its whole-column-dup workaround compiles but RUNS slower than the
 #: fold (15.4 vs 6.8 s at 10×) — so past this cap the interpreted
 #: literal-VALUE fold is kept deliberately, a measured ruling, not a
-#: missing case. Env: SPARK_GRAFT_COMPILED_ENCODE_MAX_CHAINS.
+#: missing case.
 _COMPILED_ENCODE_MAX_CHAINS = 128
 
 
@@ -1083,9 +1083,7 @@ def _sql_best_cell(
 #: expression tree), compiled wins from the 10× probe up (est
 #: 3.4 MB: 5.6 s vs 7.3 s; 30×: 5.8 s vs 18.5 s/28.9 s). Both forms
 #: are bit-identical (oracle-checked at sf0.01 AND sf0.1 on each
-#: path), so this is plan selection, not semantics. Env override:
-#: SPARK_GRAFT_COMPILED_ASSIGN_MIN_BYTES (0 forces compiled
-#: everywhere; a huge value forces the interpreted fold).
+#: path), so this is plan selection, not semantics.
 _COMPILED_ASSIGN_MIN_BYTES = 2 * 1024 * 1024
 
 #: cap on k·dim for the compiled nested-greatest form: its expression
@@ -1096,7 +1094,7 @@ _COMPILED_ASSIGN_MIN_BYTES = 2 * 1024 * 1024
 #: reaches hundreds of MB — a driver OOM or parser failure, not a
 #: slow plan — so the interpreted literal-VALUE fold (whose state is
 #: one array literal) is the only safe form. 2048 keeps a 2× margin
-#: over the measured point. Env: SPARK_GRAFT_COMPILED_ASSIGN_MAX_KDIM.
+#: over the measured point.
 _COMPILED_ASSIGN_MAX_KDIM = 2048
 
 
@@ -1115,29 +1113,8 @@ def _use_compiled_assign(
     configured) is treated as UNKNOWN — plans without real statistics
     report exactly that value, and the conservative posture when no
     estimate exists is the interpreted fold."""
-    import os
-
-    if k is not None and dim is not None:
-        try:
-            max_kdim = int(
-                os.environ.get(
-                    "SPARK_GRAFT_COMPILED_ASSIGN_MAX_KDIM",
-                    _COMPILED_ASSIGN_MAX_KDIM,
-                )
-            )
-        except ValueError:  # pragma: no cover
-            max_kdim = _COMPILED_ASSIGN_MAX_KDIM
-        if k * dim > max_kdim:
-            return False
-    try:
-        thr = int(
-            os.environ.get(
-                "SPARK_GRAFT_COMPILED_ASSIGN_MIN_BYTES",
-                _COMPILED_ASSIGN_MIN_BYTES,
-            )
-        )
-    except ValueError:  # pragma: no cover
-        thr = _COMPILED_ASSIGN_MIN_BYTES
+    if k is not None and dim is not None and k * dim > _COMPILED_ASSIGN_MAX_KDIM:
+        return False
     try:
         est = int(
             corpus._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
@@ -1151,7 +1128,7 @@ def _use_compiled_assign(
         return False  # interpreted fold when no estimate exists
     if est == unknown:  # stats absent, not "huge" (ADVICE r12)
         return False
-    return est >= thr
+    return est >= _COMPILED_ASSIGN_MIN_BYTES
 
 
 def _sql_lit_d(x: float) -> str:
@@ -1357,18 +1334,7 @@ def pq_encode(
     # validated envelope at both registered configs (4×16 and 32×16
     # both give 16·64 = 1024)
     n_codes = max(len(v) for v in by_sub.values())
-    import os as _os
-
-    try:
-        max_chains = int(
-            _os.environ.get(
-                "SPARK_GRAFT_COMPILED_ENCODE_MAX_CHAINS",
-                _COMPILED_ENCODE_MAX_CHAINS,
-            )
-        )
-    except ValueError:  # pragma: no cover
-        max_chains = _COMPILED_ENCODE_MAX_CHAINS
-    if n_sub * n_codes <= max_chains and _use_compiled_assign(
+    if n_sub * n_codes <= _COMPILED_ENCODE_MAX_CHAINS and _use_compiled_assign(
         corpus, k=n_codes, dim=n_sub * sub_len
     ):
         # the argmin chains live in a PROJECT (one column per

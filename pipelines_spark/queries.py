@@ -15,6 +15,13 @@ Spark partitionings, so round(sum(double)) can flip at a .xx5
 boundary); the decimal result is cast back to DOUBLE in both engines.
 Integer sums are exact natively; per-row float expressions are
 deterministic and only need identical rounding.
+
+That convention is written in one place, ``functions/exact.py``, and
+called here, never spelled out: ``exact_sum`` / ``exact_sum_sql``
+write every exact float sum, ``exact_mean`` / ``exact_mean_sparksql``
+every exact mean and ``exact_div_round`` / ``exact_div_round_sql``
+every exact ratio (a source check in tests/test_functions.py keeps
+hand-written copies out).
 """
 
 from __future__ import annotations
@@ -31,8 +38,11 @@ from pyspark.sql import types as T
 from pipelines_spark.functions.datetime_ops import derive_partition_columns
 from pipelines_spark.functions.exact import (
     exact_div_round,
+    exact_div_round_sql,
     exact_mean,
     exact_mean_sparksql,
+    exact_sum,
+    exact_sum_sql,
 )
 from pipelines_spark.functions.json_ops import nest_payload
 from pipelines_spark.llm.dedup import (
@@ -277,15 +287,15 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar arithmetic; SURVEY §2.6)."""
     register(spark, sf_dir, ("lineitem",))
     return spark.sql(
-        """
+        f"""
         SELECT l_returnflag, l_linestatus,
-               CAST(round(sum(CAST(l_quantity AS DECIMAL(18,6))), 2) AS DOUBLE)      AS sum_qty,
-               CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,6))), 2) AS DOUBLE) AS sum_base_price,
-               CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))), 2) AS DOUBLE) AS sum_disc_price,
-               CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax) AS DECIMAL(18,6))), 2) AS DOUBLE) AS sum_charge,
-               (CAST((CASE WHEN CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) * 1000000 AS DECIMAL(38,0)) < 0 THEN -((2 * abs(CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) * 1000000 AS DECIMAL(38,0))) * 1 + (CAST(count(*) AS DECIMAL(38,0)) * 100)) div (2 * (CAST(count(*) AS DECIMAL(38,0)) * 100))) ELSE ((2 * abs(CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) * 1000000 AS DECIMAL(38,0))) * 1 + (CAST(count(*) AS DECIMAL(38,0)) * 100)) div (2 * (CAST(count(*) AS DECIMAL(38,0)) * 100))) END) / 10000.0 AS DOUBLE))      AS avg_qty,
-               (CAST((CASE WHEN CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) * 1000000 AS DECIMAL(38,0)) < 0 THEN -((2 * abs(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) * 1000000 AS DECIMAL(38,0))) * 1 + (CAST(count(*) AS DECIMAL(38,0)) * 100)) div (2 * (CAST(count(*) AS DECIMAL(38,0)) * 100))) ELSE ((2 * abs(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) * 1000000 AS DECIMAL(38,0))) * 1 + (CAST(count(*) AS DECIMAL(38,0)) * 100)) div (2 * (CAST(count(*) AS DECIMAL(38,0)) * 100))) END) / 10000.0 AS DOUBLE)) AS avg_price,
-               (CAST((CASE WHEN CAST(sum(CAST(l_discount AS DECIMAL(18,6))) * 1000000 AS DECIMAL(38,0)) < 0 THEN -((2 * abs(CAST(sum(CAST(l_discount AS DECIMAL(18,6))) * 1000000 AS DECIMAL(38,0))) * 1 + (CAST(count(*) AS DECIMAL(38,0)) * 100)) div (2 * (CAST(count(*) AS DECIMAL(38,0)) * 100))) ELSE ((2 * abs(CAST(sum(CAST(l_discount AS DECIMAL(18,6))) * 1000000 AS DECIMAL(38,0))) * 1 + (CAST(count(*) AS DECIMAL(38,0)) * 100)) div (2 * (CAST(count(*) AS DECIMAL(38,0)) * 100))) END) / 10000.0 AS DOUBLE))      AS avg_disc,
+               {exact_sum_sql("l_quantity", 2)}      AS sum_qty,
+               {exact_sum_sql("l_extendedprice", 2)} AS sum_base_price,
+               {exact_sum_sql("l_extendedprice * (1 - l_discount)", 2)} AS sum_disc_price,
+               {exact_sum_sql("l_extendedprice * (1 - l_discount) * (1 + l_tax)", 2)} AS sum_charge,
+               {exact_mean_sparksql(exact_sum_sql("l_quantity"), "count(*)", sum_scale=6)}      AS avg_qty,
+               {exact_mean_sparksql(exact_sum_sql("l_extendedprice"), "count(*)", sum_scale=6)} AS avg_price,
+               {exact_mean_sparksql(exact_sum_sql("l_discount"), "count(*)", sum_scale=6)}      AS avg_disc,
                count(*)                                                         AS count_order
         FROM lineitem
         WHERE l_shipdate <= timestamp '1998-09-02 00:00:00'
@@ -305,13 +315,13 @@ def revenue_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the shuffle carries per-order rows, not per-lineitem rows)."""
     register(spark, sf_dir, ("orders", "lineitem"))
     return spark.sql(
-        """
+        f"""
         SELECT date_trunc('month', o.o_orderdate) AS order_month,
                CAST(round(sum(po.rev), 2) AS DOUBLE) AS revenue,
                count(*) AS n_orders
         FROM orders o
         JOIN (SELECT l_orderkey,
-                     sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS rev
+                     {exact_sum_sql("l_extendedprice * (1 - l_discount)")} AS rev
               FROM lineitem GROUP BY l_orderkey) po
           ON o.o_orderkey = po.l_orderkey
         GROUP BY 1
@@ -330,12 +340,12 @@ def top_customers_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     (~25% faster than the join-then-aggregate formulation at sf0.1)."""
     register(spark, sf_dir, ("orders", "customer", "lineitem"))
     return spark.sql(
-        """
+        f"""
         WITH per_cust AS (
             SELECT o.o_custkey AS custkey, sum(po.rev) AS rev_d
             FROM orders o
             JOIN (SELECT l_orderkey,
-                         sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS rev
+                         {exact_sum_sql("l_extendedprice * (1 - l_discount)")} AS rev
                   FROM lineitem GROUP BY l_orderkey) po
               ON o.o_orderkey = po.l_orderkey
             GROUP BY o.o_custkey
@@ -353,9 +363,9 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q3-shaped: selective join + revenue ranking (J1/A/O4)."""
     register(spark, sf_dir, ("customer", "orders", "lineitem"))
     return spark.sql(
-        """
+        f"""
         SELECT l.l_orderkey,
-               CAST(round(sum(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue,
+               {exact_sum_sql("l.l_extendedprice * (1 - l.l_discount)", 2)} AS revenue,
                o.o_orderdate, o.o_orderpriority
         FROM customer c
         JOIN orders o ON c.c_custkey = o.o_custkey
@@ -377,9 +387,9 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, ("customer", "orders", "lineitem", "supplier", "nation", "region")
     )
     return spark.sql(
-        """
+        f"""
         SELECT n.n_name,
-               CAST(round(sum(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue
+               {exact_sum_sql("l.l_extendedprice * (1 - l.l_discount)", 2)} AS revenue
         FROM customer c
         JOIN orders o ON c.c_custkey = o.o_custkey
         JOIN lineitem l ON l.l_orderkey = o.o_orderkey
@@ -405,7 +415,7 @@ def f1_filter_expressions(spark: SparkSession, sf_dir: str) -> DataFrame:
         df = df.filter(~cond | cond.isNull())
     return df.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n_rows"),
-        F.round(F.sum(F.col("l_extendedprice").cast("decimal(18,6)")), 2).cast("double").alias("sum_price"),
+        exact_sum("l_extendedprice", 2).alias("sum_price"),
     )
 
 
@@ -450,7 +460,7 @@ def j1_orders_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("r_name", "n_name")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2).cast("double").alias("total_price"),
+            exact_sum("o_totalprice", 2).alias("total_price"),
         )
     )
 
@@ -641,7 +651,7 @@ def a7_hourly_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2).cast("double").alias("sum_value"),
+            exact_sum("value", 2).alias("sum_value"),
         )
     )
 
@@ -662,9 +672,9 @@ def w4_rolling_hourly_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     trailing sum of value."""
     register(spark, sf_dir, ("events",))
     return spark.sql(
-        """
+        f"""
         SELECT event_id, user_id,
-               CAST(round(sum(CAST(value AS DECIMAL(18,6))) OVER (
+               CAST(round({exact_sum_sql("value")} OVER (
                    PARTITION BY user_id ORDER BY ts
                    RANGE BETWEEN INTERVAL '1' HOUR PRECEDING AND CURRENT ROW
                ), 2) AS DOUBLE) AS rolling_1h
@@ -1001,7 +1011,7 @@ def t1_tumbling_5min(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "5 minutes").start.alias("window_start"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2).cast("double").alias("sum_value"),
+            exact_sum("value", 2).alias("sum_value"),
         )
     )
 
@@ -1016,7 +1026,7 @@ def t2_incremental_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return df.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_rows"),
-        F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2).cast("double").alias("sum_value"),
+        exact_sum("value", 2).alias("sum_value"),
         F.max("ts").alias("max_ts"),
     )
 
@@ -1039,7 +1049,7 @@ def f6_pruned_incremental_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = spark.table("orders").filter(F.col("o_orderdate") >= F.lit("1999-01-01").cast("timestamp"))
     return df.groupBy(F.date_trunc("month", "o_orderdate").alias("order_month")).agg(
         F.count(F.lit(1)).alias("n_orders"),
-        F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2).cast("double").alias("total_price"),
+        exact_sum("o_totalprice", 2).alias("total_price"),
     )
 
 
@@ -1291,8 +1301,8 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     the parquet scan; no shuffle beyond the single-row final agg."""
     register(spark, sf_dir, ("lineitem",))
     return spark.sql(
-        """
-        SELECT CAST(round(sum(CAST(l_extendedprice * l_discount AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue,
+        f"""
+        SELECT {exact_sum_sql("l_extendedprice * l_discount", 2)} AS revenue,
                count(*) AS n_lines
         FROM lineitem
         WHERE l_shipdate >= timestamp '1997-01-01 00:00:00'
@@ -1309,10 +1319,10 @@ def a12_rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue by (year, priority), (year), and grand total."""
     register(spark, sf_dir, ("orders",))
     return spark.sql(
-        """
+        f"""
         SELECT coalesce(year(o_orderdate), -1) AS order_year,
                coalesce(o_orderpriority, 'ALL') AS priority,
-               CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2) AS DOUBLE)  AS total_price,
+               {exact_sum_sql("o_totalprice", 2)}  AS total_price,
                count(*)                     AS n_orders
         FROM orders
         GROUP BY ROLLUP (year(o_orderdate), o_orderpriority)
@@ -1458,9 +1468,7 @@ def j11_asof_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("asof_pts") * F.lit(1_000_000),
             out_scale=2,
         ).alias("avg_staleness_s"),
-        F.round(
-            F.sum(F.col("asof_purchase_value").cast("decimal(18,6)")), 2
-        ).cast("double").alias("sum_purchase_value"),
+        exact_sum("asof_purchase_value", 2).alias("sum_purchase_value"),
     )
 
 
@@ -1489,12 +1497,12 @@ def a17_grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     not the full cube — in ONE map-side Expand pass over the scan."""
     register(spark, sf_dir, ("lineitem",))
     return spark.sql(
-        """
+        f"""
         SELECT CAST(coalesce(year(l_shipdate), -1) AS INTEGER) AS ship_year,
                coalesce(l_returnflag, 'ALL') AS returnflag,
                CAST(grouping(year(l_shipdate)) AS INTEGER) AS g_year,
                CAST(grouping(l_returnflag) AS INTEGER)     AS g_flag,
-               CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue,
+               {exact_sum_sql("l_extendedprice * (1 - l_discount)", 2)} AS revenue,
                count(*) AS n_lines
         FROM lineitem
         GROUP BY GROUPING SETS ((year(l_shipdate)), (l_returnflag), ())
@@ -1718,8 +1726,8 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the fact (never a per-row re-execution)."""
     register(spark, sf_dir, ("lineitem", "part"))
     return spark.sql(
-        """
-        SELECT CAST(round(sum(CAST(l.l_extendedprice AS DECIMAL(18,6))) / 7.0, 2) AS DOUBLE) AS avg_yearly,
+        f"""
+        SELECT CAST(round({exact_sum_sql("l.l_extendedprice")} / 7.0, 2) AS DOUBLE) AS avg_yearly,
                count(*) AS n_rows
         FROM lineitem l
         JOIN part p ON p.p_partkey = l.l_partkey
@@ -1762,10 +1770,10 @@ def q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar-subquery broadcast + anti-join decorrelation in one plan."""
     register(spark, sf_dir, ("customer", "orders"))
     return spark.sql(
-        """
+        f"""
         SELECT c_mktsegment,
                count(*) AS numcust,
-               CAST(round(sum(CAST(c_acctbal AS DECIMAL(18,6))), 2) AS DOUBLE) AS totacctbal
+               {exact_sum_sql("c_acctbal", 2)} AS totacctbal
         FROM customer c1
         WHERE c_acctbal > (
             SELECT avg(c_acctbal) FROM customer WHERE c_acctbal > 0.0
@@ -1826,10 +1834,10 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipelines/rj_smtr/constants.py:244-346."""
     register(spark, sf_dir, ("lineitem", "part", "supplier", "nation"))
     return spark.sql(
-        """
+        f"""
         SELECT n.n_name AS nation,
                CAST(year(l.l_shipdate) AS INTEGER) AS o_year,
-               CAST(round(sum(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,6))), 2) AS DOUBLE) AS sum_profit
+               {exact_sum_sql("l.l_extendedprice * (1 - l.l_discount)", 2)} AS sum_profit
         FROM lineitem l
         JOIN part p ON p.p_partkey = l.l_partkey
         JOIN supplier s ON s.s_suppkey = l.l_suppkey
@@ -1847,11 +1855,10 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join."""
     register(spark, sf_dir, ("lineitem", "part"))
     return spark.sql(
-        """
+        f"""
         SELECT CAST(round(
-                   100.0 * CAST(round(sum(CAST(CASE WHEN p.p_type = 'PROMO'
-                       THEN l.l_extendedprice * (1 - l.l_discount) END AS DECIMAL(18,6))), 4) AS DOUBLE)
-                   / CAST(round(sum(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,6))), 4) AS DOUBLE),
+                   100.0 * {exact_sum_sql("CASE WHEN p.p_type = 'PROMO' THEN l.l_extendedprice * (1 - l.l_discount) END", 4)}
+                   / {exact_sum_sql("l.l_extendedprice * (1 - l.l_discount)", 4)},
                4) AS DOUBLE) AS promo_revenue_pct,
                count(*) AS n_rows
         FROM lineitem l
@@ -1870,8 +1877,8 @@ def q19_bracket_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the classic predicate-decomposition test."""
     register(spark, sf_dir, ("lineitem", "part"))
     return spark.sql(
-        """
-        SELECT CAST(round(sum(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue,
+        f"""
+        SELECT {exact_sum_sql("l.l_extendedprice * (1 - l.l_discount)", 2)} AS revenue,
                count(*) AS n_rows
         FROM lineitem l
         JOIN part p ON p.p_partkey = l.l_partkey
@@ -1968,9 +1975,9 @@ def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact — Catalyst pushes the OR-pair filter below the big joins."""
     register(spark, sf_dir, ("supplier", "lineitem", "orders", "customer", "nation"))
     return spark.sql(
-        """
+        f"""
         SELECT supp_nation, cust_nation, l_year,
-               CAST(round(sum(CAST(volume AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue
+               {exact_sum_sql("volume", 2)} AS revenue
         FROM (
             SELECT n1.n_name AS supp_nation,
                    n2.n_name AS cust_nation,
@@ -2001,16 +2008,15 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir,
         ("part", "lineitem", "supplier", "orders", "customer", "nation", "region"),
     )
+    share = exact_div_round_sql(
+        exact_sum_sql("volume", where="supp_nation = 'NATION_5'") + " * 1000000",
+        exact_sum_sql("volume") + " * 1000000",
+        out_scale=6,
+    )
     return spark.sql(
-        """
+        f"""
         SELECT l_year,
-               (CAST((CASE WHEN CAST(sum(CASE WHEN supp_nation = 'NATION_5'
-                                 THEN CAST(volume AS DECIMAL(18,6))
-                                 ELSE CAST(0 AS DECIMAL(18,6)) END) * 1000000 AS DECIMAL(38,0)) < 0 THEN -((2 * abs(CAST(sum(CASE WHEN supp_nation = 'NATION_5'
-                                 THEN CAST(volume AS DECIMAL(18,6))
-                                 ELSE CAST(0 AS DECIMAL(18,6)) END) * 1000000 AS DECIMAL(38,0))) * 1000000 + (CAST(sum(CAST(volume AS DECIMAL(18,6))) * 1000000 AS DECIMAL(38,0)))) div (2 * (CAST(sum(CAST(volume AS DECIMAL(18,6))) * 1000000 AS DECIMAL(38,0))))) ELSE ((2 * abs(CAST(sum(CASE WHEN supp_nation = 'NATION_5'
-                                 THEN CAST(volume AS DECIMAL(18,6))
-                                 ELSE CAST(0 AS DECIMAL(18,6)) END) * 1000000 AS DECIMAL(38,0))) * 1000000 + (CAST(sum(CAST(volume AS DECIMAL(18,6))) * 1000000 AS DECIMAL(38,0)))) div (2 * (CAST(sum(CAST(volume AS DECIMAL(18,6))) * 1000000 AS DECIMAL(38,0))))) END) / 1000000.0 AS DOUBLE)) AS mkt_share
+               {share} AS mkt_share
         FROM (
             SELECT CAST(year(o.o_orderdate) AS INTEGER) AS l_year,
                    l.l_extendedprice * (1 - l.l_discount) AS volume,
@@ -2037,9 +2043,9 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter prunes ~2/3 of lineitem at the scan."""
     register(spark, sf_dir, ("customer", "orders", "lineitem", "nation"))
     return spark.sql(
-        """
+        f"""
         SELECT c.c_custkey, c.c_name, n.n_name,
-               CAST(round(sum(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue
+               {exact_sum_sql("l.l_extendedprice * (1 - l.l_discount)", 2)} AS revenue
         FROM customer c
         JOIN orders o ON c.c_custkey = o.o_custkey
         JOIN lineitem l ON l.l_orderkey = o.o_orderkey
@@ -2167,13 +2173,13 @@ def q11_important_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipelines/utils/dump_db/tasks.py-style quality gates.)"""
     register(spark, sf_dir, ("lineitem", "supplier"))
     return spark.sql(
-        """
+        f"""
         SELECT s.s_suppkey AS suppkey, s.s_name AS supp_name,
-               CAST(round(sum(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,6))), 2) AS DOUBLE) AS value
+               {exact_sum_sql("l.l_extendedprice * (1 - l.l_discount)", 2)} AS value
         FROM lineitem l JOIN supplier s ON s.s_suppkey = l.l_suppkey
         GROUP BY s.s_suppkey, s.s_name
-        HAVING sum(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,6))) * 100 > (
-            SELECT sum(CAST(l2.l_extendedprice * (1 - l2.l_discount) AS DECIMAL(18,6)))
+        HAVING {exact_sum_sql("l.l_extendedprice * (1 - l.l_discount)")} * 100 > (
+            SELECT {exact_sum_sql("l2.l_extendedprice * (1 - l2.l_discount)")}
             FROM lineitem l2
         )
         """
@@ -2212,10 +2218,10 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     rather than re-scanning when beneficial."""
     register(spark, sf_dir, ("lineitem", "supplier"))
     return spark.sql(
-        """
+        f"""
         WITH revenue AS (
             SELECT l_suppkey AS supplier_no,
-                   sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS total_revenue_d
+                   {exact_sum_sql("l_extendedprice * (1 - l_discount)")} AS total_revenue_d
             FROM lineitem
             WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
               AND l_shipdate <  TIMESTAMP '1997-04-01 00:00:00'
@@ -2262,18 +2268,18 @@ def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     per (customer, order). Ordered top-N so the result is stable."""
     register(spark, sf_dir, ("customer", "orders", "lineitem"))
     return spark.sql(
-        """
+        f"""
         SELECT c.c_custkey, c.c_name, o.o_orderkey,
                o.o_orderdate,
                CAST(round(CAST(o.o_totalprice AS DECIMAL(18,6)), 2) AS DOUBLE) AS total_price,
-               CAST(round(sum(CAST(l.l_quantity AS DECIMAL(18,6))), 2) AS DOUBLE) AS sum_qty
+               {exact_sum_sql("l.l_quantity", 2)} AS sum_qty
         FROM customer c
         JOIN orders o ON c.c_custkey = o.o_custkey
         JOIN lineitem l ON o.o_orderkey = l.l_orderkey
         WHERE o.o_orderkey IN (
             SELECT l_orderkey FROM lineitem
             GROUP BY l_orderkey
-            HAVING sum(CAST(l_quantity AS DECIMAL(18,6))) > 250
+            HAVING {exact_sum_sql("l_quantity")} > 250
         )
         GROUP BY c.c_custkey, c.c_name, o.o_orderkey, o.o_orderdate, o.o_totalprice
         ORDER BY total_price DESC, o_orderkey ASC
@@ -2364,12 +2370,12 @@ def a14_cube_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     read once, not once per grouping set."""
     register(spark, sf_dir, ("lineitem",))
     return spark.sql(
-        """
+        f"""
         SELECT CAST(coalesce(year(l_shipdate), -1) AS INTEGER) AS ship_year,
                coalesce(l_returnflag, 'ALL') AS returnflag,
                CAST(grouping(year(l_shipdate)) AS INTEGER)  AS g_year,
                CAST(grouping(l_returnflag) AS INTEGER)      AS g_flag,
-               CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue,
+               {exact_sum_sql("l_extendedprice * (1 - l_discount)", 2)} AS revenue,
                count(*) AS n_lines
         FROM lineitem
         GROUP BY CUBE (year(l_shipdate), l_returnflag)
@@ -3311,9 +3317,7 @@ def t3_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2)
-            .cast("double")
-            .alias("sum_value"),
+            exact_sum("value", 2).alias("sum_value"),
         )
     )
 
@@ -3627,11 +3631,7 @@ def w13_ses_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(
             "event_type", F.to_date("ts").alias("day")
         )
-        .agg(
-            F.sum(F.col("value").cast("decimal(18,6)"))
-            .cast("double")
-            .alias("y")
-        )
+        .agg(exact_sum("value").cast("double").alias("y"))
     )
     w = Window.partitionBy("event_type").orderBy("day")
     seq = daily.withColumn("t", F.row_number().over(w))
@@ -4236,12 +4236,15 @@ def w12_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id; lead() is a linear scan within it). The pair aggregate is
     partial map-side, and the row-normalizing window + final sort
     operate on the |types|² ≤ tiny transition matrix. Determinism:
-    (ts, event_id) orders ties totally, and p is a ratio of two exact
-    bigints — one double division, identically rounded in both
-    engines."""
+    (ts, event_id) orders ties totally, and p is the ratio of two exact
+    bigints rounded half up in integer arithmetic
+    (``exact_div_round_sql``), identical in both engines."""
     register(spark, sf_dir, ("events",))
+    share = exact_div_round_sql(
+        "count(*)", "sum(count(*)) OVER (PARTITION BY event_type)", out_scale=6
+    )
     return spark.sql(
-        """
+        f"""
         WITH seq AS (
             SELECT user_id, event_type,
                    lead(event_type) OVER (
@@ -4252,7 +4255,7 @@ def w12_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT event_type AS from_type,
                next_type AS to_type,
                count(*) AS n,
-               (CAST((CASE WHEN CAST(count(*) AS DECIMAL(38,0)) < 0 THEN -((2 * abs(CAST(count(*) AS DECIMAL(38,0))) * 1000000 + (CAST(sum(count(*)) OVER (PARTITION BY event_type) AS DECIMAL(38,0)))) div (2 * (CAST(sum(count(*)) OVER (PARTITION BY event_type) AS DECIMAL(38,0))))) ELSE ((2 * abs(CAST(count(*) AS DECIMAL(38,0))) * 1000000 + (CAST(sum(count(*)) OVER (PARTITION BY event_type) AS DECIMAL(38,0)))) div (2 * (CAST(sum(count(*)) OVER (PARTITION BY event_type) AS DECIMAL(38,0))))) END) / 1000000.0 AS DOUBLE)) AS p
+               {share} AS p
         FROM seq
         WHERE next_type IS NOT NULL
         GROUP BY event_type, next_type
@@ -4761,15 +4764,7 @@ def j19_bloom_semi_reduction(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact.groupBy(F.col("l_returnflag").alias("returnflag"))
         .agg(
             F.count(F.lit(1)).alias("n_lines"),
-            F.round(
-                F.sum(
-                    (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                        "decimal(18,6)"
-                    )
-                ),
-                2,
-            )
-            .cast("double")
+            exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 2)
             .alias("revenue"),
         )
         .orderBy("returnflag")
@@ -4794,7 +4789,7 @@ def a39_cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.table("events")
         .filter(F.col("value").isNotNull())
         .groupBy("event_type", F.to_date("ts").alias("day"))
-        .agg(F.sum(F.col("value").cast("decimal(18,6)")).alias("y"))
+        .agg(exact_sum("value").alias("y"))
     )
     target = daily.groupBy("event_type").agg(
         exact_mean(F.sum("y"), F.count(F.lit(1)), sum_scale=6, out_scale=6)
@@ -4855,7 +4850,7 @@ def trend_theilsen_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("value").isNotNull())
         .groupBy("event_type", F.to_date("ts").alias("day"))
         .agg(
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("y")
+            exact_sum("value").cast("double").alias("y")
         )
     )
     seq = daily.withColumn(

@@ -22,6 +22,11 @@ frames computed by Spark are written by Spark. So a
 the driver encodes and renames into place: no Spark job, no Python
 worker. ``advance_from`` aggregates a batch, and its result is written
 by a distributed Spark write that never passes through the driver.
+Reads follow the same rule: a scalar is read on the driver, per-key
+frames by Spark. ``get_table_watermark`` decodes the store's files
+with pyarrow and takes the max itself (no Spark job);
+``current`` and ``filter_newer`` stay Spark frames, sized by the key
+space.
 Whether the table exists yet is asked of the Hadoop FileSystem of its
 path (``sinks/partitioned.py::_hadoop_fs``), so a store at a
 ``file://``, ``hdfs://`` or ``s3a://`` URI reads back what it wrote,
@@ -77,10 +82,49 @@ class WatermarkStore:
         )
 
     def get_table_watermark(self, scope: str) -> tuple[datetime | None, int | None]:
-        rows = self.current(scope).filter(F.col("key") == GLOBAL_KEY).collect()
-        if not rows:
+        """The table-global watermark of ``scope``: ``current(scope)``'s
+        ``GLOBAL_KEY`` row, computed on the driver. Every visible file of
+        the store (names starting with ``_`` or ``.`` are skipped, as
+        Spark's listing skips them) is read through the path's Hadoop
+        FileSystem and decoded with pyarrow, Spark's INT96 and the
+        driver's ``TIMESTAMP(MICROS)`` alike; the timestamp converts
+        as ``collect`` converts it (``TimestampType.fromInternal``)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        fs, root = _hadoop_fs(self.spark, self.path)
+        if not fs.exists(root):
             return None, None
-        return rows[0]["watermark_ts"], rows[0]["watermark_id"]
+        read_bytes = self.spark._jvm.org.apache.commons.io.IOUtils.toByteArray
+        prefix = len(root.toString())
+        ts_maxes, id_maxes = [], []
+        files = fs.listFiles(root, True)
+        while files.hasNext():
+            path = files.next().getPath()
+            rel = path.toString()[prefix:].split("/")
+            if any(part.startswith(("_", ".")) for part in rel if part):
+                continue
+            stream = fs.open(path)
+            try:
+                data = read_bytes(stream)
+            finally:
+                stream.close()
+            t = pq.read_table(
+                pa.BufferReader(data),
+                columns=["scope", "key", "watermark_ts", "watermark_id"],
+                coerce_int96_timestamp_unit="us",
+            )
+            t = t.filter(
+                pc.and_(pc.equal(t["scope"], scope), pc.equal(t["key"], GLOBAL_KEY))
+            )
+            micros = t["watermark_ts"].cast(pa.timestamp("us")).cast(pa.int64())
+            ts_maxes.append(pc.max(micros).as_py())
+            id_maxes.append(pc.max(t["watermark_id"]).as_py())
+        # max over files ignoring NULL, as SQL max does
+        ts = max((v for v in ts_maxes if v is not None), default=None)
+        id_ = max((v for v in id_maxes if v is not None), default=None)
+        return T.TimestampType().fromInternal(ts), id_
 
     def set_table_watermark(
         self,

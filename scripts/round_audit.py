@@ -13,6 +13,9 @@ class dead as the registry evolves by classifying EVERY site:
 - ``decimal-exact`` — the rounded expression is DECIMAL-typed (Spark
   and DuckDB both round exact decimals with exact half-up/half-away
   arithmetic; no double is involved, positive-value behavior agrees).
+  An ``exact_sum(...)`` / ``exact_sum_sql(...)`` operand is one: the
+  helpers of ``functions/exact.py`` sum in ``DECIMAL(18,6)``, and a
+  SQL alias of an unscaled ``exact_sum_sql(...)`` resolves to that type.
 - ``continuous`` — the expression derives from an irrational /
   transcendental map (sqrt, log, exp, pow, trig, stddev/corr,
   interpolated percentiles, cosine similarity, ...). Its exact value
@@ -92,8 +95,14 @@ _IDENT_STOP = frozenset(
     "sum count avg min max x y c w v s t r n".split()
 )
 
-#: DECIMAL-typed operand: rounding exact fixed-point arithmetic.
-DECIMAL_RE = re.compile(r"decimal\s*\(|decimal\s*\d|DECIMAL", re.I)
+#: DECIMAL-typed operand: rounding exact fixed-point arithmetic,
+#: written out or through the exact-sum helpers (functions/exact.py)
+DECIMAL_RE = re.compile(
+    r"decimal\s*\(|decimal\s*\d|DECIMAL|\bexact_sum(?:_sql)?\s*\(", re.I
+)
+
+#: scale of an unscaled ``exact_sum_sql(...)``: it sums DECIMAL(18,6)
+EXACT_SUM_SCALE = 6
 
 #: pure selection of a stored input double (no arithmetic): min/max/
 #: etc. over a bare column reference, rounded at scale >= 2.
@@ -215,9 +224,15 @@ def _sql_alias_decimal(
             window,
             re.I,
         )
-        if not m:
+        if m:
+            s = int(m.group(1))
+        elif re.search(
+            rf"\{{exact_sum_sql\((?:\"[^\"]*\"|'[^']*')\)\}}[^\n]*?\bAS\s+{re.escape(name)}\b",
+            window,
+        ):
+            s = EXACT_SUM_SCALE
+        else:
             continue
-        s = int(m.group(1))
         if not has_double_cast:
             return "decimal-exact"  # decimal in, decimal rounding out
         if scale is not None and s <= scale:

@@ -242,7 +242,10 @@ def test_exact_mean_matches_fraction_reference_in_all_three_engines(spark):
     must all equal round-half-up of the EXACT rational mean — checked
     against Fraction arithmetic over randoms plus the deliberate
     *.5e-4 tie cases that split round(double, 4) across engines
-    (58.5066/12 = 4.87555; the sf0.1 sweep's two real failures)."""
+    (58.5066/12 = 4.87555; the sf0.1 sweep's two real failures). At
+    sum scale 0 the mean is an integer ratio, so the ratio helpers
+    (``exact_div_round`` and its SQL twin) must give the same doubles,
+    on .5 boundaries of either sign too."""
     import random
     from fractions import Fraction
 
@@ -250,6 +253,8 @@ def test_exact_mean_matches_fraction_reference_in_all_three_engines(spark):
     from pyspark.sql import functions as F
 
     from pipelines_spark.functions.exact import (
+        exact_div_round,
+        exact_div_round_sql,
         exact_mean,
         exact_mean_sparksql,
     )
@@ -262,7 +267,9 @@ def test_exact_mean_matches_fraction_reference_in_all_three_engines(spark):
 
     rng = random.Random(7)
     cases = [(585066, 12, 4, 4), (73735, 10, 4, 4), (-73735, 10, 4, 4),
-             (301869, 40, 4, 4), (5, 1000, 0, 4), (1, 2, 0, 2)]
+             (301869, 40, 4, 4), (5, 1000, 0, 4), (1, 2, 0, 2),
+             (1, 8, 0, 2), (-1, 8, 0, 2), (-3, 8, 0, 2), (-5, 1000, 0, 2),
+             (-1, 2, 0, 2), (-975, 200000, 0, 4), (-(10**13 + 5), 2 * 10**6, 0, 6)]
     for _ in range(40):
         cases.append((rng.randint(-10**14, 10**14), rng.randint(1, 10**6),
                       rng.choice([0, 2, 4, 6, 8]), rng.choice([2, 4, 6])))
@@ -286,6 +293,11 @@ def test_exact_mean_matches_fraction_reference_in_all_three_engines(spark):
             "SELECT " + exact_mean_sparksql(sum_sql, str(n), sum_scale=ss, out_scale=os_) + " AS m"
         ).collect()[0]["m"]
         assert abs(got_sql - exp) < 1e-12, (s_int, n, ss, os_, got_sql, exp)
+        if ss == 0:
+            got_div = spark.sql(
+                "SELECT " + exact_div_round_sql(str(s_int), str(n), out_scale=os_) + " AS m"
+            ).collect()[0]["m"]
+            assert got_div == got_sql, (s_int, n, os_, got_div, got_sql)
 
     # Column API: one pass over all cases in a single plan
     rows = [(i, s, n) for i, (s, n, _, _) in enumerate(cases)]
@@ -307,3 +319,77 @@ def test_exact_mean_matches_fraction_reference_in_all_three_engines(spark):
             for i, (s_int, n, _, _) in enumerate(cases):
                 exp = expected(s_int, n, ss, os_)
                 assert abs(got[i] - exp) < 1e-12, (s_int, n, ss, os_, got[i], exp)
+            if ss == 0:
+                div = {
+                    r["i"]: r["m"]
+                    for r in df.select(
+                        "i",
+                        exact_div_round(F.col("s"), F.col("n"), out_scale=os_).alias("m"),
+                    ).collect()
+                }
+                assert div == got, (os_, div, got)
+
+
+def test_exact_sum_helpers_write_the_decimal_sum(spark):
+    """The exact-sum helpers emit exactly the DECIMAL(18,6) sum the
+    queries used to spell out (SQL text and analyzed Column
+    expression), and the rounded form rounds the exact decimal half
+    up: a sum of 1.005 gives 1.01 in both twins."""
+    import re
+
+    from pipelines_spark.functions.exact import exact_sum, exact_sum_sql
+
+    assert exact_sum_sql("x") == "sum(CAST(x AS DECIMAL(18,6)))"
+    assert exact_sum_sql("x", 2) == (
+        "CAST(round(sum(CAST(x AS DECIMAL(18,6))), 2) AS DOUBLE)"
+    )
+    assert exact_sum_sql("x", where="k = 1") == (
+        "sum(CASE WHEN k = 1 THEN CAST(x AS DECIMAL(18,6))"
+        " ELSE CAST(0 AS DECIMAL(18,6)) END)"
+    )
+
+    df = spark.createDataFrame([(1, 1.005), (2, 0.0)], "k int, x double")
+
+    def analyzed(frame):
+        plan = frame._jdf.queryExecution().analyzed().toString()
+        return re.sub(r"#\d+L?", "#", plan)
+
+    for scale, inline in (
+        (None, F.sum(F.col("x").cast("decimal(18,6)"))),
+        (2, F.round(F.sum(F.col("x").cast("decimal(18,6)")), 2).cast("double")),
+    ):
+        helper = df.agg(exact_sum(F.col("x"), scale).alias("s"))
+        assert analyzed(helper) == analyzed(df.agg(inline.alias("s")))
+        assert analyzed(df.agg(exact_sum("x", scale).alias("s"))) == analyzed(helper)
+
+    df.createOrReplaceTempView("exact_sum_t")
+    got = spark.sql(
+        f"SELECT {exact_sum_sql('x', 2)} AS s,"
+        f" {exact_sum_sql('x', 2, where='k = 2')} AS s2 FROM exact_sum_t"
+    ).collect()[0]
+    assert (got["s"], got["s2"]) == (1.01, 0.0)
+    assert df.agg(exact_sum("x", 2).alias("s")).collect()[0]["s"] == 1.01
+
+
+def test_queries_write_no_exact_sum_by_hand():
+    """Every exact float sum and exact mean or ratio in queries.py is
+    written by functions/exact.py: no ``sum(`` there takes a
+    DECIMAL(18,6) argument, and no round-half-up CASE over
+    DECIMAL(38,0) operands is spelled out."""
+    import inspect
+    import re
+
+    import pipelines_spark.queries as Q
+
+    src = inspect.getsource(Q)
+    by_hand = []
+    for m in re.finditer(r"(?<!\w)sum\s*\(", src, re.I):
+        depth = 0
+        for j in range(m.end() - 1, len(src)):
+            depth += {"(": 1, ")": -1}.get(src[j], 0)
+            if depth == 0:
+                break
+        if "decimal(18,6)" in src[m.end() : j].lower():
+            by_hand.append(src.count("\n", 0, m.start()) + 1)
+    assert not by_hand, f"hand-written exact sums at queries.py lines {by_hand}"
+    assert "DECIMAL(38,0)) < 0 THEN" not in src

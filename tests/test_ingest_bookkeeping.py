@@ -288,6 +288,53 @@ def test_watermark_roundtrip_on_file_uri(spark, tmp_path):
     )
 
 
+def test_table_watermark_read_runs_no_spark_job(spark, tmp_path, monkeypatch):
+    """``get_table_watermark`` reads the store on the driver: 0 Spark
+    jobs per call, and the value ``current(scope)`` gives for
+    ``GLOBAL_KEY``, over rows the driver wrote (``set_table_watermark``,
+    ``TIMESTAMP(MICROS)``) and rows Spark wrote (``advance_from``,
+    INT96), with the process and the session in a zone with DST."""
+    from pipelines_spark.state.watermark import GLOBAL_KEY
+
+    sc = spark.sparkContext
+    store = WatermarkStore(spark, str(tmp_path / "wm"))
+
+    def read(scope):
+        got = []
+        jobs = _jobs_in(sc, f"wm-read-{scope}", lambda: got.append(
+            store.get_table_watermark(scope)))
+        assert jobs == [], scope
+        rows = store.current(scope).filter(F.col("key") == GLOBAL_KEY).collect()
+        assert got[0] == ((rows[0]["watermark_ts"], rows[0]["watermark_id"])
+                          if rows else (None, None)), scope
+        return got[0]
+
+    monkeypatch.setenv("TZ", "America/Sao_Paulo")
+    time.tzset()
+    spark.conf.set("spark.sql.session.timeZone", "America/Sao_Paulo")
+    try:
+        assert read("a") == (None, None)  # no store yet
+        # an hour that repeats in Sao Paulo (the 2019 DST end)
+        store.set_table_watermark("a", ts=datetime(2019, 2, 16, 23, 30), id_=3)
+        store.set_table_watermark("b", ts=None, id_=5)
+        assert read("a") == (datetime(2019, 2, 16, 23, 30), 3)
+        base = 1550372400  # 2019-02-17 03:00 UTC, after the driver's row
+        batch = spark.range(3).select(
+            F.timestamp_seconds(F.lit(base) + F.col("id") * 60).alias("ts"),
+            F.col("id"),
+        )
+        store.advance_from("a", batch, ts_col="ts", id_col="id")
+        store.advance_from("c", batch, key_col="id", ts_col="ts")
+        ts, id_ = read("a")
+        assert (ts, id_) == (datetime.fromtimestamp(base + 120), 3)
+        assert read("b") == (None, 5)
+        assert read("c") == (None, None)  # per-key rows only
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        monkeypatch.delenv("TZ")
+        time.tzset()
+
+
 def _orders_csv(path, rows):
     path.write_text("".join(f"{k},{d},{p}\n" for k, d, p in rows))
     return str(path)

@@ -2195,17 +2195,18 @@ def test_compiled_assign_paths_bit_identical(spark, sf_medium, monkeypatch):
     the interpreted literal-VALUE greatest-fold and the compiled
     nested-greatest expression (similarity._sql_best_cell_compiled).
     The two formulations must be BIT-identical — force each via the
-    size-threshold env knob and compare the full ivf_topk output,
+    size-threshold constant and compare the full ivf_topk output,
     floats included, row for row."""
     from pyspark.sql import functions as F
 
+    from pipelines_spark.llm import similarity
     from pipelines_spark.llm.similarity import ivf_topk
 
     emb = spark.read.parquet(f"{sf_medium}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 10)
     outs = {}
-    for tag, thr in (("interp", str(1 << 60)), ("compiled", "0")):
-        monkeypatch.setenv("SPARK_GRAFT_COMPILED_ASSIGN_MIN_BYTES", thr)
+    for tag, thr in (("interp", 1 << 60), ("compiled", 0)):
+        monkeypatch.setattr(similarity, "_COMPILED_ASSIGN_MIN_BYTES", thr)
         outs[tag] = sorted(
             (r["query_id"], r["neighbor_id"], repr(r["cosine"]), r["rank"])
             for r in ivf_topk(
@@ -2221,14 +2222,14 @@ def test_compiled_assign_threshold_is_size_adaptive(spark, sf_medium, monkeypatc
     constant: under the default threshold the sf0.01 corpus stays on
     the interpreted fold; forcing the threshold to 0 selects the
     compiled form; a huge threshold never does."""
+    from pipelines_spark.llm import similarity
     from pipelines_spark.llm.similarity import _use_compiled_assign
 
     emb = spark.read.parquet(f"{sf_medium}/embeddings.parquet")
-    monkeypatch.delenv("SPARK_GRAFT_COMPILED_ASSIGN_MIN_BYTES", raising=False)
     assert _use_compiled_assign(emb) is False
-    monkeypatch.setenv("SPARK_GRAFT_COMPILED_ASSIGN_MIN_BYTES", "0")
+    monkeypatch.setattr(similarity, "_COMPILED_ASSIGN_MIN_BYTES", 0)
     assert _use_compiled_assign(emb) is True
-    monkeypatch.setenv("SPARK_GRAFT_COMPILED_ASSIGN_MIN_BYTES", str(1 << 60))
+    monkeypatch.setattr(similarity, "_COMPILED_ASSIGN_MIN_BYTES", 1 << 60)
     assert _use_compiled_assign(emb) is False
 
 
@@ -2239,15 +2240,16 @@ def test_compiled_assign_guards(spark, sf_medium, monkeypatch):
     OOM, not a slow plan); (b) a size estimate equal to
     spark.sql.defaultSizeInBytes means NO statistics, not a huge
     corpus, and must keep the conservative interpreted fold."""
+    from pipelines_spark.llm import similarity
     from pipelines_spark.llm.similarity import _use_compiled_assign
 
     emb = spark.read.parquet(f"{sf_medium}/embeddings.parquet")
-    monkeypatch.setenv("SPARK_GRAFT_COMPILED_ASSIGN_MIN_BYTES", "0")
+    monkeypatch.setattr(similarity, "_COMPILED_ASSIGN_MIN_BYTES", 0)
     # inside the envelope: k=16/dim=64 -> compiled
     assert _use_compiled_assign(emb, k=16, dim=64) is True
     # k*dim above the cap -> interpreted, regardless of corpus size
     assert _use_compiled_assign(emb, k=1000, dim=64) is False
-    monkeypatch.setenv("SPARK_GRAFT_COMPILED_ASSIGN_MAX_KDIM", str(1000 * 64))
+    monkeypatch.setattr(similarity, "_COMPILED_ASSIGN_MAX_KDIM", 1000 * 64)
     assert _use_compiled_assign(emb, k=1000, dim=64) is True
     # a stats-free plan reports defaultSizeInBytes exactly: unknown,
     # never "huge" — localCheckpoint-derived inputs are the real case
@@ -2312,6 +2314,7 @@ def test_pq_encode_compiled_paths_bit_identical(spark, sf_medium, monkeypatch):
     config stays on the interpreted fold regardless of the byte
     threshold (the measured chain-count cap: 512 inline least-merges
     blow the 64 KB codegen wall)."""
+    from pipelines_spark.llm import similarity
     from pipelines_spark.llm.similarity import (
         _codebook_rows,
         pq_codebook,
@@ -2323,12 +2326,12 @@ def test_pq_encode_compiled_paths_bit_identical(spark, sf_medium, monkeypatch):
         pq_codebook(emb, id_col="vec_id", vec_col="embedding", dim=64,
                     n_sub=4, n_codes=16)
     )
-    monkeypatch.setenv("SPARK_GRAFT_COMPILED_ASSIGN_MIN_BYTES", str(1 << 60))
+    monkeypatch.setattr(similarity, "_COMPILED_ASSIGN_MIN_BYTES", 1 << 60)
     interp = sorted(
         map(tuple, pq_encode(emb, rows, id_col="vec_id", vec_col="embedding",
                              dim=64, n_sub=4).collect())
     )
-    monkeypatch.setenv("SPARK_GRAFT_COMPILED_ASSIGN_MIN_BYTES", "0")
+    monkeypatch.setattr(similarity, "_COMPILED_ASSIGN_MIN_BYTES", 0)
     comp_df = pq_encode(emb, rows, id_col="vec_id", vec_col="embedding",
                         dim=64, n_sub=4)
     comp = sorted(map(tuple, comp_df.collect()))
