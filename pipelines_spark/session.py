@@ -25,6 +25,10 @@ configuration:
   working set with headroom: a warm pass then compiles 0 classes.
   The entries are small (one loaded class each), and the setting is
   static — it takes effect only when this call creates the session.
+- ANSI mode on (``spark.sql.ansi.enabled``, Spark 4's default, pinned
+  so no deployment default can turn it off): ``functions/exact.py``
+  sums floats as 64-bit longs, and only ANSI mode makes a long ``sum``
+  that passes 2⁶³ raise ``ARITHMETIC_OVERFLOW`` instead of wrapping.
 """
 
 from __future__ import annotations
@@ -73,6 +77,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.ansi.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )

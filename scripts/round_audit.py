@@ -5,8 +5,9 @@ tie-free or explicitly converted to the exact-rational discipline.
 Background (docs/PARITY_SF01.md): ``round(double, d)`` of an EXACT
 rational value (a mean/ratio of fixed-point decimals or integers) can
 land ON the ``*.5·10⁻ᵈ`` boundary, where Spark (BigDecimal HALF_UP on
-the double's exact binary expansion) and DuckDB (scaled multiply)
-may round to different sides. Round 10 converted 40+ such sites to
+the double's decimal form, ``Double.toString``: ``round(1.005, 2)`` is
+1.01 although the double is 1.00499999999999989…) and DuckDB (a scaled
+multiply of the binary value) may round to different sides. Round 10 converted 40+ such sites to
 integer arithmetic (``functions/exact.py``); this sweep keeps the
 class dead as the registry evolves by classifying EVERY site:
 
@@ -14,8 +15,9 @@ class dead as the registry evolves by classifying EVERY site:
   and DuckDB both round exact decimals with exact half-up/half-away
   arithmetic; no double is involved, positive-value behavior agrees).
   An ``exact_sum(...)`` / ``exact_sum_sql(...)`` operand is one: the
-  helpers of ``functions/exact.py`` sum in ``DECIMAL(18,6)``, and a
-  SQL alias of an unscaled ``exact_sum_sql(...)`` resolves to that type.
+  helpers of ``functions/exact.py`` return the DECIMAL(28,6) sum of
+  ``DECIMAL(18,6)`` row values (computed on 64-bit longs), and a SQL
+  alias of an unscaled ``exact_sum_sql(...)`` resolves to that type.
 - ``continuous`` — the expression derives from an irrational /
   transcendental map (sqrt, log, exp, pow, trig, stddev/corr,
   interpolated percentiles, cosine similarity, ...). Its exact value
@@ -24,12 +26,13 @@ class dead as the registry evolves by classifying EVERY site:
 - ``passthrough`` — the rounded expression SELECTS one of the stored
   input doubles unchanged (min/max/first/last/greatest/least/lag/
   lead/any_value over a bare column, no arithmetic). The testdata's
-  value columns are 2-dp fixed-point stored as nearest-doubles; the
-  exact binary expansion of nearest(k/100) never has a 5 in the
-  (d+1)-th decimal for d ≥ 2 (it is either the exact short decimal —
-  zeros beyond 2 dp — or a ...000000x/...999999x expansion), so
-  ``round(·, d≥2)`` of a selected input value cannot tie. Scale
-  d < 2 is NOT exempt and stays unclassified.
+  value columns are 2-dp fixed-point stored as nearest-doubles. Spark
+  rounds the decimal form of nearest(k/100), which is k/100 itself
+  (on JDK 17 at worst a longer string within half an ulp of it), and
+  DuckDB rounds its scaled value, a few ulps from an integer; neither
+  lies near a ``*.5·10⁻ᵈ`` boundary for d ≥ 2, so ``round(·, d≥2)``
+  of a selected input value cannot tie. Scale d < 2 is NOT exempt
+  and stays unclassified.
 - ``quantize-seam`` — ``F.round(expr, d).cast("decimal(p,d′≥d)")``:
   the round IS the operator's defined quantization of a float- or
   continuous-derived stream into fixed point (the PCA / embedding
@@ -101,7 +104,7 @@ DECIMAL_RE = re.compile(
     r"decimal\s*\(|decimal\s*\d|DECIMAL|\bexact_sum(?:_sql)?\s*\(", re.I
 )
 
-#: scale of an unscaled ``exact_sum_sql(...)``: it sums DECIMAL(18,6)
+#: scale of an unscaled ``exact_sum_sql(...)``: its value is DECIMAL(28,6)
 EXACT_SUM_SCALE = 6
 
 #: pure selection of a stored input double (no arithmetic): min/max/
@@ -182,8 +185,8 @@ def _resolves_continuous(inner: str, lines: list[str], lineno: int) -> bool:
 
 
 #: input columns known to be 2-dp fixed-point in the testdata (stored
-#: as nearest-doubles; their exact expansions carry no 5 in any
-#: decimal position beyond the 2nd, so round(col, d>=2) cannot tie)
+#: as nearest-doubles; Spark rounds their decimal form k/100, DuckDB
+#: their scaled value, so round(col, d>=2) cannot tie)
 _FIXED2_COLS = frozenset(
     "l_quantity l_extendedprice l_discount l_tax o_totalprice "
     "c_acctbal s_acctbal value".split()

@@ -2,6 +2,7 @@
 
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from pipelines_spark.functions.cleaning import (
@@ -330,45 +331,230 @@ def test_exact_mean_matches_fraction_reference_in_all_three_engines(spark):
                 assert div == got, (os_, div, got)
 
 
-def test_exact_sum_helpers_write_the_decimal_sum(spark):
-    """The exact-sum helpers emit exactly the DECIMAL(18,6) sum the
-    queries used to spell out (SQL text and analyzed Column
-    expression), and the rounded form rounds the exact decimal half
-    up: a sum of 1.005 gives 1.01 in both twins."""
-    import re
+#: the decimal sum the exact-sum helpers must equal, kept here as the
+#: literal reference (functions/exact.py computes it on longs)
+_REF_SUM = "sum(CAST({e} AS DECIMAL(18,6)))"
+_REF_SUM_WHERE = (
+    "sum(CASE WHEN {w} THEN CAST({e} AS DECIMAL(18,6))"
+    " ELSE CAST(0 AS DECIMAL(18,6)) END)"
+)
+
+
+def _rounded(total, scale):
+    return f"CAST(round({total}, {scale}) AS DOUBLE)"
+
+
+def _assert_sums_equal_reference(spark, view, expr, *, where, group="g"):
+    """Both exact-sum twins, with ``scale`` None and 2 and with
+    ``where``, equal the literal decimal sum per ``group`` (same value
+    and type)."""
+    from pipelines_spark.functions.exact import exact_sum, exact_sum_sql
+
+    ref = _REF_SUM.format(e=expr)
+    ref_w = _REF_SUM_WHERE.format(e=expr, w=where)
+    pairs = {
+        "s": (ref, exact_sum_sql(expr)),
+        "s2": (_rounded(ref, 2), exact_sum_sql(expr, 2)),
+        "w": (ref_w, exact_sum_sql(expr, where=where)),
+        "w2": (_rounded(ref_w, 2), exact_sum_sql(expr, 2, where=where)),
+    }
+    cols = ", ".join(f"{r} AS {k}_ref, {h} AS {k}" for k, (r, h) in pairs.items())
+    got = spark.sql(f"SELECT {group} AS g, {cols} FROM {view} GROUP BY {group}")
+    col = spark.table(view).groupBy(F.expr(group).alias("g")).agg(
+        exact_sum(F.expr(expr)).alias("c"), exact_sum(F.expr(expr), 2).alias("c2")
+    )
+    types = dict(got.dtypes)
+    assert types["s"] == types["s_ref"] == "decimal(28,6)"
+    assert dict(col.dtypes)["c"] == "decimal(28,6)"
+    rows = got.join(col, "g").collect()
+    assert rows
+    for row in rows:
+        for k in pairs:
+            assert row[k] == row[f"{k}_ref"], (k, row)
+        assert (row["c"], row["c2"]) == (row["s_ref"], row["s2_ref"]), row
+
+
+def test_exact_sum_helpers_equal_the_decimal_sum(spark):
+    """The exact-sum helpers sum each row on a 64-bit long, and the
+    result equals ``sum(CAST(x AS DECIMAL(18,6)))`` bit for bit in both
+    twins: on decimal ties whose binary value lies below or above the
+    tie, at and past the fast path's 2⁴⁰/10⁶ bound, on near-ties made by
+    products, on NULLs and empty groups, in a window, and for FLOAT,
+    INT and DECIMAL arguments, which the ``typeof`` guard keeps on the
+    cast. The rounded form rounds the exact decimal half up: a sum of
+    1.005 (binary 1.00499999999999989…) gives 1.01."""
+    import math
+    import random
 
     from pipelines_spark.functions.exact import exact_sum, exact_sum_sql
 
-    assert exact_sum_sql("x") == "sum(CAST(x AS DECIMAL(18,6)))"
-    assert exact_sum_sql("x", 2) == (
-        "CAST(round(sum(CAST(x AS DECIMAL(18,6))), 2) AS DOUBLE)"
+    rng = random.Random(15)
+    bound = 2.0**40 / 1e6
+    values = [1.0000005, 0.0000005, 2.5e-6, 0.1234565, 123.4567895, 99999.9999995,
+              1.005, 0.0, 1e-300, 16777216.0000005, 999999999999.999]
+    values += [bound, math.nextafter(bound, math.inf), math.nextafter(bound, 0.0),
+               bound + 5e-7, bound - 5e-7, bound + 1e-6, 2 * bound + 5e-7]
+    values += [(rng.randrange(10**10) * 10 + 5) / 10**7 for _ in range(400)]
+    values += [rng.randrange(10**9) / 10**6 for _ in range(100)]
+    values += [-v for v in values]
+    df = spark.createDataFrame(
+        [(i, i % 3, v) for i, v in enumerate(values)] + [(-1, 0, None)],
+        "g int, k int, x double",
     )
-    assert exact_sum_sql("x", where="k = 1") == (
-        "sum(CASE WHEN k = 1 THEN CAST(x AS DECIMAL(18,6))"
-        " ELSE CAST(0 AS DECIMAL(18,6)) END)"
-    )
-
-    df = spark.createDataFrame([(1, 1.005), (2, 0.0)], "k int, x double")
-
-    def analyzed(frame):
-        plan = frame._jdf.queryExecution().analyzed().toString()
-        return re.sub(r"#\d+L?", "#", plan)
-
-    for scale, inline in (
-        (None, F.sum(F.col("x").cast("decimal(18,6)"))),
-        (2, F.round(F.sum(F.col("x").cast("decimal(18,6)")), 2).cast("double")),
-    ):
-        helper = df.agg(exact_sum(F.col("x"), scale).alias("s"))
-        assert analyzed(helper) == analyzed(df.agg(inline.alias("s")))
-        assert analyzed(df.agg(exact_sum("x", scale).alias("s"))) == analyzed(helper)
-
     df.createOrReplaceTempView("exact_sum_t")
+    # the decimal ties (doubles below and above the tie) are inputs on
+    # which a bare rint(x·1e6) misses the cast
+    y = "(x * 1e6)"
+    naive = f"CAST(rint({y}) AS BIGINT) <> CAST(CAST(x AS DECIMAL(18,6)) * 1000000 AS BIGINT)"
+    assert spark.sql(f"SELECT count_if({naive}) FROM exact_sum_t").first()[0] > 50
+    for group in ("g", "k", "x < 0", "1"):
+        _assert_sums_equal_reference(spark, "exact_sum_t", "x", where="k = 1", group=group)
+
+    # near-ties made by products of short decimals (a 3-decimal
+    # discount gives 7-decimal products with 5 in the last place)
+    spark.sql(
+        "SELECT id AS g, id % 2 AS k,"
+        " CAST(9000 + id * 7919 % 9000000 AS DOUBLE) / 100 AS l_extendedprice,"
+        " CAST(5 + 10 * (id % 10) AS DOUBLE) / 1000 AS l_discount,"
+        " CAST(id % 9 AS DOUBLE) / 100 AS l_tax FROM range(20000)"
+    ).createOrReplaceTempView("exact_sum_li")
+    prod = "l_extendedprice * (1 - l_discount) * (1 + l_tax)"
+    py = f"(({prod}) * 1e6)"
+    near = (
+        f"count_if(abs(abs({py} - rint({py})) - 0.5) <= 1e-3),"
+        f" count_if(CAST(rint({py}) AS BIGINT)"
+        f" <> CAST(CAST({prod} AS DECIMAL(18,6)) * 1000000 AS BIGINT))"
+    )
+    n_near, n_naive = spark.sql(f"SELECT {near} FROM exact_sum_li").first()
+    assert n_near > 100 and n_naive > 100, (n_near, n_naive)
+    for group in ("g", "k"):
+        _assert_sums_equal_reference(spark, "exact_sum_li", prod, where="l_tax > 0.04", group=group)
+
+    # an empty group is NULL, an all-NULL group too; the conditional
+    # sum of a group whose rows all fail the predicate is an exact 0
+    empty = spark.sql(
+        f"SELECT {exact_sum_sql('x')} AS s, {exact_sum_sql('x', 2)} AS s2,"
+        f" {exact_sum_sql('x', where='k = 1')} AS w FROM exact_sum_t WHERE g > 10000"
+    ).first()
+    assert tuple(empty) == (None, None, None)
+    assert df.filter("g > 10000").agg(exact_sum("x")).first()[0] is None
+    nulls = spark.sql(
+        f"SELECT {exact_sum_sql('x')}, {exact_sum_sql('x', where='k = 1')},"
+        f" {exact_sum_sql('x', where='k = 0')} FROM exact_sum_t WHERE g = -1"
+    ).first()
+    assert tuple(nulls) == (None, 0, None)
+
+    # a window sum: the text ends in its sum(...) call
+    frame = "OVER (ORDER BY g ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)"
+    win = spark.sql(
+        f"SELECT {_REF_SUM.format(e='x')} {frame} AS r, {exact_sum_sql('x')} {frame} AS s"
+        " FROM exact_sum_t"
+    )
+    assert win.filter("r IS DISTINCT FROM s").count() == 0
+
+    # non-DOUBLE arguments take the cast on every row: the fast branch
+    # is folded out of the plan
+    for typ, vals in (
+        ("float", [0.1, 1.0000005, 0.3, -2.5e-6, 16777216.0, 1234.5678, 3.4e10]),
+        ("int", [5, -3, 2147483647, 0, -2147483648]),
+        ("decimal(20,8)", ["1.00000050", "-0.00000050", "123456.12345678", "99999999999.99999949"]),
+    ):
+        spark.sql(
+            "SELECT g, g % 2 AS k, CAST(v AS " + typ + ") AS x FROM VALUES "
+            + ", ".join(f"({i}, '{v}')" for i, v in enumerate(vals))
+            + " AS t(g, v)"
+        ).createOrReplaceTempView("exact_sum_typed")
+        for group in ("g", "1"):
+            _assert_sums_equal_reference(spark, "exact_sum_typed", "x", where="k = 1", group=group)
+        plan = spark.sql(f"SELECT {exact_sum_sql('x')} AS s FROM exact_sum_typed")
+        assert "rint" not in plan._jdf.queryExecution().optimizedPlan().toString(), typ
+    plan = spark.sql(f"SELECT {exact_sum_sql('x')} AS s FROM exact_sum_t")
+    assert "rint" in plan._jdf.queryExecution().optimizedPlan().toString()
+
+    one = spark.createDataFrame([(1, 1.005), (2, 0.0)], "k int, x double")
+    one.createOrReplaceTempView("exact_sum_one")
     got = spark.sql(
         f"SELECT {exact_sum_sql('x', 2)} AS s,"
-        f" {exact_sum_sql('x', 2, where='k = 2')} AS s2 FROM exact_sum_t"
+        f" {exact_sum_sql('x', 2, where='k = 2')} AS s2 FROM exact_sum_one"
     ).collect()[0]
     assert (got["s"], got["s2"]) == (1.01, 0.0)
-    assert df.agg(exact_sum("x", 2).alias("s")).collect()[0]["s"] == 1.01
+    assert one.agg(exact_sum("x", 2).alias("s")).collect()[0]["s"] == 1.01
+
+
+def test_exact_sum_non_finite_rows_match_the_decimal_sum(spark):
+    """NaN and ±inf rows take the cast path, so both twins end as the
+    decimal sum does: the same error, or the same value (Spark 4.1
+    casts them to NULL, so they drop out of the sum)."""
+    from pipelines_spark.functions.exact import exact_sum, exact_sum_sql
+
+    def outcome(run):
+        try:
+            return ("value", run())
+        except Exception as e:  # noqa: BLE001 - compared, not swallowed
+            return ("error", getattr(e, "getCondition", lambda: type(e).__name__)())
+
+    ref = _REF_SUM.format(e="x")
+    for v in (float("nan"), float("inf"), float("-inf")):
+        df = spark.createDataFrame([(1, v), (1, 2.5)], "k int, x double")
+        df.createOrReplaceTempView("exact_sum_nf")
+
+        def first(text):
+            return outcome(lambda: spark.sql(f"SELECT {text} FROM exact_sum_nf").first()[0])
+
+        assert first(exact_sum_sql("x")) == first(ref)
+        assert first(exact_sum_sql("x", where="k = 1")) == first(ref)
+        assert first(exact_sum_sql("x", 2)) == first(_rounded(ref, 2))
+        assert outcome(lambda: df.agg(exact_sum("x")).first()[0]) == first(ref)
+
+
+def test_exact_sum_overflow_raises_in_both_twins(spark):
+    """A group whose total passes 2⁶³ units (9.2·10¹² in value) raises
+    ARITHMETIC_OVERFLOW in both twins, with and without ``scale`` and
+    ``where`` and in a window; it never returns a wrapped value."""
+    from pipelines_spark.functions.exact import exact_sum, exact_sum_sql
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    df = spark.createDataFrame([(1, 9.9e11)] * 10, "k int, x double")
+    df.createOrReplaceTempView("exact_sum_big")
+    texts = [exact_sum_sql("x"), exact_sum_sql("x", 2), exact_sum_sql("x", where="k = 1"),
+             exact_sum_sql("x") + " OVER ()"]
+    for text in texts:
+        with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+            spark.sql(f"SELECT {text} FROM exact_sum_big").collect()
+    for col in (exact_sum("x"), exact_sum("x", 2)):
+        with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+            df.agg(col).collect()
+    # nine rows stay in range and are exact
+    assert str(spark.sql(
+        f"SELECT {exact_sum_sql('x')} FROM (SELECT x FROM exact_sum_big LIMIT 9)"
+    ).first()[0]) == "8910000000000.000000"
+
+
+def test_q1_plan_sums_no_decimal(spark, sf_small):
+    """q1's optimized plan holds no ``sum`` over a DecimalType: its
+    seven exact sums run on longs."""
+    from pipelines_spark.queries import QUERIES
+
+    plan = QUERIES["q1_pricing_summary"](spark, sf_small)._jdf.queryExecution().optimizedPlan()
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    def sums(expr):
+        if expr.nodeName() == "Sum":
+            yield expr.child().dataType().typeName()
+        for child in seq(expr.children()):
+            yield from sums(child)
+
+    def walk(node):
+        for expr in seq(node.expressions()):
+            yield from sums(expr)
+        for child in seq(node.children()):
+            yield from walk(child)
+
+    types = list(walk(plan))
+    assert len(types) >= 7, types
+    assert all(t == "long" for t in types), types
 
 
 def test_queries_write_no_exact_sum_by_hand():
